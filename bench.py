@@ -196,6 +196,7 @@ def composed_relay_bench(
         simulate_change_stream,
     )
     from pymongo_change_stream_reader_spark.streaming.composed_relay import (
+        STORES,
         composed_apply_batch,
     )
 
@@ -324,15 +325,7 @@ def composed_relay_bench(
         )
         # drop the skipped stores' enabling paths (config-comparison
         # runs: the r11-parity six-store set vs the full eight)
-        skip_keys = {
-            "dedup": ("dedup_index_path", "dedup_flags_path"),
-            "bm25": ("bm25_index_path",),
-            "ann": ("ann_index_path",),
-            "aggview": ("agg_view_path",),
-            "joinview": ("join_view_path",),
-            "starview": ("star_view_path",),
-            "erregistry": ("er_registry_path",),
-        }
+        skip_keys = {s.name: s.paths for s in STORES}
         for s in skip_stores:
             for k in skip_keys[s]:
                 kw[k] = None

@@ -41,23 +41,24 @@ def main() -> None:
         # DataSource / Kafka / file) must set RelaySettings.pipeline so
         # build_relay applies the translated pipeline (watch.py:79).
     )
-    index_stores = (
-        cfg.dedup_index_path, cfg.bm25_index_path, cfg.ann_index_path,
-        cfg.agg_view_path, cfg.join_view_path, cfg.star_view_path,
-        cfg.er_registry_path,
+    from pymongo_change_stream_reader_spark.streaming import (
+        composed_relay as cr,
     )
-    if any(p is not None for p in index_stores):
-        # engine extension: any serving-index path switches the entry
-        # point to the single-pass composed relay — replica + dedup
-        # flags + BM25 + ANN maintained from ONE source read per
-        # micro-batch with per-store epoch markers
+
+    # the config fields carry the composed relay's keyword names
+    stores = {k: getattr(cfg, k) for k in cr.DEFAULTS if hasattr(cfg, k)}
+    if any(
+        stores[p] is not None
+        for s in cr.STORES
+        if s.name != "replica"
+        for p in s.paths
+    ):
+        # engine extension: any non-replica store path switches the
+        # entry point to the single-pass composed relay — every
+        # enabled store maintained from ONE source read per micro-batch
         import logging
 
         from pyspark.sql import functions as F
-
-        from pymongo_change_stream_reader_spark.streaming.composed_relay import (
-            start_composed_relay,
-        )
 
         if cfg.full_document != "updateLookup":
             # the indexing relays fold each event's POST-image; without
@@ -75,16 +76,16 @@ def main() -> None:
                 "every update",
                 cfg.full_document,
             )
-        ann_vec = cfg.ann_vec_col
+        stores["n_buckets"] = cfg.replica_buckets
         if cfg.ann_index_path is not None:
             # the embedding rides INSIDE the Extended-JSON document
             # string; decode the ANN_VEC_COL field into a typed column
             # for the relay (the key stays the documentKey string
             # unless ANN_KEY_COL points at a derived column — the id
             # type must match the bootstrapped index's)
-            ann_vec = "_ann_vec"
+            stores["ann_vec_col"] = "_ann_vec"
             events = events.withColumn(
-                ann_vec,
+                "_ann_vec",
                 F.from_json(
                     F.get_json_object(
                         F.col("fullDocument"), f"$.{cfg.ann_vec_col}"
@@ -92,13 +93,12 @@ def main() -> None:
                     "array<double>",
                 ),
             )
-        er_spec = er_field_paths = None
         if cfg.er_registry_path is not None:
             from pymongo_change_stream_reader_spark.streaming.er_registry import (
                 er_spec_from_config,
             )
 
-            er_spec, er_field_paths = er_spec_from_config(
+            stores["er_spec"], stores["er_field_paths"] = er_spec_from_config(
                 cfg.er_fields,
                 cfg.er_threshold,
                 cfg.er_block_field,
@@ -107,37 +107,11 @@ def main() -> None:
                 max_block_size=cfg.er_max_block,
                 id_mode=cfg.er_id_mode,
             )
-        query = start_composed_relay(
+        query = cr.start_composed_relay(
             events,
             cfg.checkpoint_location,
-            replica_path=cfg.replica_path,
-            dedup_index_path=cfg.dedup_index_path,
-            dedup_flags_path=cfg.dedup_flags_path,
-            bm25_index_path=cfg.bm25_index_path,
-            n_buckets=cfg.replica_buckets,
             trigger_interval=f"{cfg.commit_interval} seconds",
-            ann_index_path=cfg.ann_index_path,
-            ann_vec_col=ann_vec,
-            ann_key_col=cfg.ann_key_col,
-            ann_kind=cfg.ann_kind,
-            agg_view_path=cfg.agg_view_path,
-            agg_group_path=cfg.agg_group_path,
-            agg_value_path=cfg.agg_value_path,
-            agg_value_type=cfg.agg_value_type,
-            agg_track_minmax=cfg.agg_track_minmax,
-            join_view_path=cfg.join_view_path,
-            join_side_path=cfg.join_side_path,
-            join_fk_path=cfg.join_fk_path,
-            join_dim_id_path=cfg.join_dim_id_path,
-            join_join_type=cfg.join_join_type,
-            star_view_path=cfg.star_view_path,
-            star_view_dims=cfg.star_view_dims,
-            star_side_path=cfg.star_side_path,
-            star_join_type=cfg.star_join_type,
-            er_registry_path=cfg.er_registry_path,
-            er_spec=er_spec,
-            er_id_path=cfg.er_id_path,
-            er_field_paths=er_field_paths,
+            **stores,
         )
     elif cfg.replica_path:
         # engine extension: REPLICA_PATH switches the sink to replica

@@ -101,7 +101,6 @@ __all__ = [
     "agg_view_batch",
     "read_agg_view",
     "read_agg_view_keys",
-    "start_agg_view_maintenance",
 ]
 
 
@@ -754,27 +753,6 @@ def agg_view_batch(
                 os.path.join(droot, f"epoch={e}"), ignore_errors=True
             )
         return True
-
-
-def start_agg_view_maintenance(
-    events: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_interval: str = "10 seconds",
-    **view_kw,
-):
-    """foreachBatch consumer maintaining the view from a change-event
-    stream — the agg-view sibling of start_replica_maintenance."""
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        agg_view_batch(batch_df, path, int(epoch_id), **view_kw)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=trigger_interval)
-        .start()
-    )
 
 
 def compact_agg_view_keys(

@@ -18,8 +18,8 @@ Per micro-batch:
    under the next generation — serving results afterwards equal a
    frozen-quantizer rebuild over the live vectors, and the whole batch
    is ONE journal span (a crash rolls all of it back together);
-3. the epoch marker (query-id scoped, streaming/kafka_sink.py) guards
-   replays, and a crashed half-applied batch rolls back via the append
+3. the composed relay's epoch marker (streaming/composed_relay.py)
+   guards replays, and a crashed half-applied batch rolls back via the append
    journal INSIDE the index write lock before the replay re-applies.
 
 The index must be BOOTSTRAPPED from a corpus snapshot
@@ -58,9 +58,6 @@ from pymongo_change_stream_reader_spark.streaming.index_relay import (
     _last_effect_per_key,
 )
 from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
-    _commit_epoch,
-    _epoch_committed,
-    _query_id,
     _require_local_path,
 )
 
@@ -156,42 +153,3 @@ def ann_ingest_batch(
             ),
             partition_by="cell",
         )
-
-
-def start_streaming_ann_index(
-    events: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    vec_col: str = "embedding",
-    key_col: str = "documentKey",
-    trigger_interval: str | None = None,
-    kind: str = "ivf",
-):
-    """Streaming entry point: foreachBatch fold-into-index with
-    epoch-marker replay protection (same contract as
-    start_streaming_bm25_index)."""
-    # fail fast at stream START, beside the path checks — a typo'd
-    # kind must not wait for the first non-empty batch to surface
-    _require_kind(kind, "start_streaming_ann_index")
-    _require_local_path(checkpoint_dir, "checkpoint_dir")
-    _require_local_path(index_path, "index_path")
-    marker_dir = os.path.join(checkpoint_dir, "epoch_log")
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        qid = _query_id(checkpoint_dir)
-        if _epoch_committed(marker_dir, epoch_id, qid):
-            logger.info("epoch %s already ingested; skipping replay", epoch_id)
-            return
-        if batch_df.isEmpty():
-            return
-        ann_ingest_batch(batch_df, index_path, vec_col, key_col, kind)
-        _commit_epoch(marker_dir, epoch_id, qid)
-
-    writer = (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()

@@ -1,73 +1,49 @@
-"""Single-pass composed relay: replica materialization + near-dup
-flagging + BM25 index maintenance + ANN index maintenance + the
-incremental aggregate/join/star views + the persisted
-entity-resolution registry in ONE foreachBatch consumer.
+"""Single-pass composed relay: every store in ONE foreachBatch consumer.
 
-Running the consumers as separate streaming queries (the individual
-``start_replica_maintenance`` / ``start_streaming_dedup`` /
-``start_streaming_bm25_index`` / ``start_streaming_ann_index`` entry
-points) reads the change-stream source once per store and keeps
-checkpoints whose offsets drift apart.  This composition reads each
-micro-batch ONCE — the batch is pinned with an eager localCheckpoint
-so the applies share one source scan instead of re-triggering it per
-action — and fans it out to every enabled store.
+The reference runs ONE change-stream cursor and hands each event to
+every consumer in-process (reference process_manager.py,
+change_handler.py); this is that topology on Structured Streaming.
+Each micro-batch is read once, pinned with a localCheckpoint, and fanned
+out to every enabled store.  The stores are declared once, in
+``STORES``; both entry points take every keyword, default and start
+check from that table.  Each store is exactly-once under replay by one
+of three protocols:
 
-Exactly-once per store, replay-correct as a whole:
+- ``lww``: the replica's LWW merge is idempotent — a replay is a no-op;
+- ``marker``: dedup, BM25 and ANN each keep a query-id-scoped epoch
+  marker at ``<name>_epoch_log`` (streaming/kafka_sink.py), so a crash
+  between two stores' commits replays only the missing store;
+- ``pointer``: the views and the ER registry keep their own epoch
+  pointer + persisted deltas; their batch function returns False for a
+  replayed epoch.
 
-- the REPLICA apply is idempotent by construction (the LWW merge —
-  re-applying a batch is a no-op), so it runs unconditionally;
-- the DEDUP, BM25, and ANN applies each keep their OWN epoch marker
-  (query-id-scoped, streaming/kafka_sink.py): a crash after dedup
-  committed but before BM25 ran replays the batch with dedup
-  short-circuited and BM25 applied — no store double-applies, no
-  store is skipped;
-- the AGG VIEW and the JOIN VIEW each carry their own epoch pointer
-  + persisted deltas (streaming/agg_view.py and streaming/join_view.py
-  replay contracts) and short-circuit replayed epochs internally.  Within each store the same crash-recovery
-  machinery as the standalone relays applies (per-epoch flag
-  partition overwrite; the BM25/ANN append journal rollback inside
-  the index write lock).
-
-Reference parity: the reference process runs ONE change-stream cursor
-and dispatches each event to every consumer in-process (reference
-process_manager.py, change_handler.py) — this is that topology on
-Structured Streaming, where the per-store markers replace the
-reference's single prefix-commit because Spark redelivers whole
-micro-batches.
-
-Scale: one source read per trigger; each store's apply stays
-batch-sized (the contracts of materialize_change_batch,
-dedup_flag_batch, bm25_ingest_batch, ann_ingest_batch).  The stores
-mutate INDEPENDENT directories under independent locks and markers,
-so their applies OVERLAP from a small driver-side thread pool
-(``max_parallel_stores``, default 4 — Spark's scheduler is
-thread-safe and each apply spends most of its wall time blocked on
-small driver-latency-bound jobs: marker probe, lock, journal, merge).
-The r8 measurement put the sequential four-store floor at ~14 s/batch
-with only dedup carrying real per-event cost — overlapping collapses
-the floor toward the slowest single store.  Replay correctness is
-UNCHANGED: the per-store markers never depended on apply order (a
-crash leaves an arbitrary subset committed either way, and the replay
-re-applies exactly the missing stores); set ``max_parallel_stores=1``
-for strictly-ordered sequential applies (deterministic kill-point
-testing).
+The stores touch independent directories under independent locks, so
+their applies overlap from a driver thread pool (``max_parallel_stores``,
+default 4) — each is mostly blocked on small driver-bound jobs.  Replay
+correctness never depends on apply order; ``max_parallel_stores=1``
+applies strictly in table order (deterministic kill-point testing).
 """
 
 from __future__ import annotations
 
 import logging
+import math
 import os
+import time
+from concurrent.futures import ThreadPoolExecutor
+from threading import Lock
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 
-from pymongo_change_stream_reader_spark.streaming.ann_relay import (
-    ann_ingest_batch,
-)
-from pymongo_change_stream_reader_spark.streaming.dedup_relay import (
-    dedup_flag_batch,
-)
-from pymongo_change_stream_reader_spark.streaming.index_relay import (
-    bm25_ingest_batch,
+from pymongo_change_stream_reader_spark.streaming import (
+    agg_view,
+    ann_relay,
+    dedup_relay,
+    er_registry,
+    index_relay,
+    join_view,
+    star_view,
 )
 from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
     _commit_epoch,
@@ -77,111 +53,211 @@ from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
 )
 from pymongo_change_stream_reader_spark.streaming.materialize import (
     materialize_change_batch,
+    reduce_batch_shared,
 )
 
 logger = logging.getLogger(__name__)
+
+
+class Store(NamedTuple):
+    """One composed store.  ``name`` keys its outcome and timing;
+    ``paths`` enable it (all or none); ``options`` are its own keywords
+    with their defaults; ``replay`` is ``lww``/``marker``/``pointer``;
+    ``reduce(columns)`` says whether it takes the shared LWW reduce;
+    ``apply(pinned, reduced, epoch, kw)`` folds the batch in, ``kw``
+    holding every keyword plus ``scope`` (the query id) and
+    ``store_stats``.  ``required`` options must be set and ``choices``
+    pairs (option, allowed values) hold, checked at stream start."""
+
+    name: str
+    paths: tuple
+    options: dict
+    replay: str
+    reduce: Callable
+    apply: Callable
+    required: tuple = ()
+    choices: tuple = ()
+
+
+# options several stores read
+_SHARED = {
+    "text_col": "fullDocument", "key_col": "documentKey",
+    "n_buckets": 16, "retain": 2,
+}
+_JOIN_TYPES = ("inner", "left")
+
+
+def _replica(pinned, reduced, epoch, kw):
+    materialize_change_batch(
+        pinned, kw["replica_path"], kw["n_buckets"], retain=kw["retain"],
+        return_df=False, reduced=reduced,
+    )
+
+
+def _dedup(pinned, reduced, epoch, kw):
+    dedup_relay.dedup_flag_batch(
+        pinned, kw["dedup_index_path"], kw["dedup_flags_path"],
+        kw["text_col"], kw["key_col"], kw["num_hashes"], kw["bands"],
+        kw["n"], epoch_id=epoch, scope=kw["scope"],
+    )
+
+
+def _bm25(pinned, reduced, epoch, kw):
+    index_relay.bm25_ingest_batch(
+        pinned, kw["bm25_index_path"], kw["text_col"], kw["key_col"]
+    )
+
+
+def _ann(pinned, reduced, epoch, kw):
+    ann_relay.ann_ingest_batch(
+        pinned, kw["ann_index_path"], kw["ann_vec_col"],
+        kw["ann_key_col"] or kw["key_col"], kw["ann_kind"],
+    )
+
+
+def _aggview(pinned, reduced, epoch, kw):
+    return agg_view.agg_view_batch(
+        pinned, kw["agg_view_path"], int(epoch),
+        group_path=kw["agg_group_path"], value_path=kw["agg_value_path"],
+        value_type=kw["agg_value_type"], n_buckets=kw["n_buckets"],
+        retain=kw["retain"], track_minmax=kw["agg_track_minmax"],
+        reduced=reduced,
+    )
+
+
+def _joinview(pinned, reduced, epoch, kw):
+    return join_view.join_view_batch(
+        pinned, kw["join_view_path"], int(epoch),
+        side_path=kw["join_side_path"], fact_side=kw["join_fact_side"],
+        dim_side=kw["join_dim_side"], fk_path=kw["join_fk_path"],
+        dim_id_path=kw["join_dim_id_path"], n_buckets=kw["n_buckets"],
+        retain=kw["retain"], join_type=kw["join_join_type"],
+        reduced=reduced,
+    )
+
+
+def _starview(pinned, reduced, epoch, kw):
+    dims = [
+        d if isinstance(d, star_view.DimSide) else star_view.DimSide(**d)
+        for d in kw["star_view_dims"]
+    ]
+    return star_view.star_view_batch(
+        pinned, kw["star_view_path"], int(epoch), dims,
+        side_path=kw["star_side_path"], fact_side=kw["star_fact_side"],
+        n_buckets=kw["n_buckets"], retain=kw["retain"],
+        join_type=kw["star_join_type"], reduced=reduced,
+    )
+
+
+def _erregistry(pinned, reduced, epoch, kw):
+    # per-epoch counters: a misconfigured ER_ID_PATH shows up as a
+    # growing skipped_ids, not a silent no-op
+    stats = kw["store_stats"]
+    if stats is not None:
+        stats = stats.setdefault("erregistry", {}).setdefault(
+            f"epoch_{int(epoch)}", {}
+        )
+    return er_registry.er_registry_cdc_batch(
+        pinned, kw["er_registry_path"], int(epoch), kw["er_spec"],
+        id_path=kw["er_id_path"], field_paths=kw["er_field_paths"],
+        n_buckets=kw["n_buckets"], retain=kw["retain"], reduced=reduced,
+        stats=stats,
+    )
+
+
+# the eight stores, in apply and thread-pool submit order
+STORES = (
+    # the replica's updateDescription-delta path reduces on its own
+    Store("replica", ("replica_path",), {}, "lww",
+          lambda cols: "updateDescription" not in cols, _replica),
+    Store("dedup", ("dedup_index_path", "dedup_flags_path"),
+          {"num_hashes": 32, "bands": 8, "n": 3},
+          "marker", lambda cols: False, _dedup),
+    Store("bm25", ("bm25_index_path",), {},
+          "marker", lambda cols: False, _bm25),
+    Store("ann", ("ann_index_path",),
+          {"ann_vec_col": "embedding", "ann_key_col": None,
+           "ann_kind": "ivf"},
+          "marker", lambda cols: False, _ann,
+          choices=(("ann_kind", tuple(ann_relay._KINDS)),)),
+    Store("aggview", ("agg_view_path",),
+          {"agg_group_path": "$.g", "agg_value_path": "$.v",
+           "agg_value_type": "double", "agg_track_minmax": False},
+          "pointer", lambda cols: True, _aggview),
+    Store("joinview", ("join_view_path",),
+          {"join_side_path": "$.side", "join_fact_side": "f",
+           "join_dim_side": "d", "join_fk_path": "$.fk",
+           "join_dim_id_path": "$._id", "join_join_type": "inner"},
+          "pointer", lambda cols: True, _joinview,
+          choices=(("join_join_type", _JOIN_TYPES),)),
+    Store("starview", ("star_view_path",),
+          {"star_view_dims": None, "star_side_path": "$.side",
+           "star_fact_side": "f", "star_join_type": "left"},
+          "pointer", lambda cols: True, _starview,
+          required=("star_view_dims",),
+          choices=(("star_join_type", _JOIN_TYPES),)),
+    # er_spec_from_config builds er_spec and er_field_paths
+    Store("erregistry", ("er_registry_path",),
+          {"er_spec": None, "er_id_path": "$._id", "er_field_paths": None},
+          "pointer", lambda cols: True, _erregistry,
+          required=("er_spec", "er_field_paths")),
+)
+
+DEFAULTS = {
+    **_SHARED,
+    **{p: None for s in STORES for p in s.paths},
+    **{k: v for s in STORES for k, v in s.options.items()},
+}
+
+
+def _resolve(stores: dict) -> dict:
+    unknown = sorted(set(stores) - set(DEFAULTS))
+    if unknown:
+        raise TypeError(f"composed relay: unknown keyword(s) {unknown}")
+    return {**DEFAULTS, **stores}
 
 
 def composed_apply_batch(
     batch: DataFrame,
     epoch_id: int,
     checkpoint_dir: str,
-    replica_path: str | None = None,
-    dedup_index_path: str | None = None,
-    dedup_flags_path: str | None = None,
-    bm25_index_path: str | None = None,
-    text_col: str = "fullDocument",
-    key_col: str = "documentKey",
-    n_buckets: int = 16,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    retain: int = 2,
-    ann_index_path: str | None = None,
-    ann_vec_col: str = "embedding",
-    ann_key_col: str | None = None,
-    ann_kind: str = "ivf",
-    store_timings: dict | None = None,
+    *,
     max_parallel_stores: int = 4,
-    agg_view_path: str | None = None,
-    agg_group_path: str = "$.g",
-    agg_value_path: str = "$.v",
-    agg_value_type: str = "double",
-    agg_track_minmax: bool = False,
-    join_view_path: str | None = None,
-    join_side_path: str = "$.side",
-    join_fact_side: str = "f",
-    join_dim_side: str = "d",
-    join_fk_path: str = "$.fk",
-    join_dim_id_path: str | None = "$._id",
-    join_join_type: str = "inner",
-    star_view_path: str | None = None,
-    star_view_dims: list | None = None,
-    star_side_path: str = "$.side",
-    star_fact_side: str = "f",
-    star_join_type: str = "left",
-    er_registry_path: str | None = None,
-    er_spec=None,
-    er_id_path: str = "$._id",
-    er_field_paths: dict | None = None,
+    store_timings: dict | None = None,
     store_stats: dict | None = None,
+    **stores,
 ) -> dict:
-    """Apply one micro-batch to every enabled store (see module
-    docstring).  Returns per-store outcomes: ``applied`` /
-    ``replayed-skip`` / ``disabled``.  Batch-testable without a
-    streaming query.  The ANN store reads the embedding from
-    ``ann_vec_col`` (decode upstream if it rides as JSON text) and its
-    id from ``ann_key_col`` (defaults to ``key_col``) — the id type
-    must match the bootstrapped index.  Pass a dict as
-    ``store_timings`` to accumulate wall seconds per section
-    (``pin``/``replica``/``dedup``/``bm25``/``ann``) across calls —
-    the per-store latency breakdown bench.py reports.  The
-    epoch-marker probe is timed inside its store's section, so a
-    replayed-skip store still records its (real) probe cost.
+    """Apply one micro-batch to every store enabled in ``stores`` (the
+    ``STORES`` keywords).  Returns each store's outcome: ``applied``,
+    ``replayed-skip`` or ``disabled``.
 
-    ``max_parallel_stores`` > 1 (default 4) overlaps the independent
-    store applies from a driver-side thread pool; per-store timings
-    then measure each section's own wall span, which OVERLAP (their
-    sum exceeds batch elapsed).  If any store's apply raises, the
-    remaining submitted applies still run to completion (each is
-    individually replay-protected), then the first error re-raises so
-    the streaming engine retries the batch — the replay skips every
-    store that committed its marker.  ``max_parallel_stores=1`` keeps
-    the strict replica->dedup->bm25->ann sequential order."""
-    import time as _time
-    from threading import Lock
-
+    A ``store_timings`` dict accumulates wall seconds across calls
+    under ``pin``, ``reduce`` (when a store takes the shared reduce)
+    and each enabled store's name; a store's marker probe counts in
+    its own section, so a replayed-skip still records its probe cost.
+    With ``max_parallel_stores`` > 1 the sections overlap, so their
+    sum exceeds the batch wall.  If a store raises, the other
+    submitted applies still finish, then the first error re-raises so
+    the engine retries the batch.  ``store_stats`` collects the ER
+    registry's per-epoch counters."""
+    kw = _resolve(stores)
     tlock = Lock()
 
     def _timed(name, fn):
-        t0 = _time.monotonic()
+        t0 = time.monotonic()
         try:
             return fn()
         finally:
             if store_timings is not None:
                 with tlock:
                     store_timings[name] = store_timings.get(name, 0.0) + (
-                        _time.monotonic() - t0
+                        time.monotonic() - t0
                     )
 
-    qid = _query_id(checkpoint_dir)
-    outcome: dict[str, str] = {}
-
     def _pin() -> DataFrame:
-        # ONE materialization of the source batch, shared by every
-        # store — then shrink the partition count to the batch's SIZE:
-        # a 2k-event trigger arriving in 32 source partitions would
-        # otherwise cost every store's first stage 32 near-empty tasks
-        # (x5 stores x several stages = a real slice of the
-        # small-batch floor, measured).  ~250 rows/task keeps the
-        # CPU-bound maps (shingling, tokenizing) parallel while
-        # dropping the empty-task overhead; large batches keep their
-        # layout — the coalesce only ever narrows.
-        import math
-
-        # lazy checkpoint + count: the count IS the materialization
-        # (one driver job, not a checkpoint job plus a count job —
-        # the stores' round-10 lesson applied to the pin itself, r14)
+        # the lazy checkpoint + count is ONE driver job; then narrow to
+        # ~250 rows/task so a small trigger in many source partitions
+        # does not cost every store's first stage near-empty tasks
         p = batch.localCheckpoint(eager=False)
         n = p.count()
         parts = p.rdd.getNumPartitions()
@@ -189,413 +265,114 @@ def composed_apply_batch(
         return p.coalesce(tgt) if tgt < parts else p
 
     pinned = _timed("pin", _pin)
-
-    # ONE shared LWW reduction for every last-event-wins store (the
-    # replica on its post-image path, the agg/join/star views, the ER
-    # registry): each used to shuffle the same micro-batch to the
-    # same per-key winners independently — five near-identical reduce
-    # jobs per trigger.  Computed eagerly ONCE here; the stores'
-    # ``reduced=`` parameter skips their own reduce.  The dedup/BM25/
-    # ANN relays intentionally keep the raw batch (they fold per-event
-    # corpora, not per-key winners).
-    plain_replica = (
-        replica_path is not None
-        and "updateDescription" not in pinned.columns
-    )
-    shared_reduced: DataFrame | None = None
-    if plain_replica or any(
-        p is not None
-        for p in (
-            agg_view_path, join_view_path, star_view_path,
-            er_registry_path,
+    enabled = [s for s in STORES if kw[s.paths[0]] is not None]
+    cols = pinned.columns
+    takes_reduce = {s.name for s in enabled if s.reduce(cols)}
+    # ONE eager LWW reduction shared by every last-event-wins store
+    reduced = None
+    if takes_reduce:
+        reduced = _timed(
+            "reduce",
+            lambda: reduce_batch_shared(pinned).localCheckpoint(eager=True),
         )
-    ):
+    qid = _query_id(checkpoint_dir)
+    ctx = dict(kw, scope=qid, store_stats=store_stats)
 
-        def _reduce() -> DataFrame:
-            from pymongo_change_stream_reader_spark.streaming.materialize import (
-                reduce_batch_shared,
-            )
+    def _section(s: Store) -> Callable[[], str]:
+        marker = os.path.join(checkpoint_dir, f"{s.name}_epoch_log")
 
-            return reduce_batch_shared(pinned).localCheckpoint(
-                eager=True
-            )
-
-        shared_reduced = _timed("reduce", _reduce)
-
-    # each section runs its own marker probe + apply + commit and
-    # returns its outcome string — safe to run concurrently with the
-    # others (independent dirs, locks, and markers)
-    sections: list[tuple[str, object]] = []
-    if replica_path is not None:
-
-        def _replica() -> str:
-            # idempotent by LWW — replays converge without a marker;
-            # the post-apply frame is unused, skip building it
-            materialize_change_batch(
-                pinned, replica_path, n_buckets, retain=retain,
-                return_df=False,
-                reduced=shared_reduced if plain_replica else None,
-            )
-            return "applied"
-
-        sections.append(("replica", _replica))
-    else:
-        outcome["replica"] = "disabled"
-    if dedup_index_path is not None:
-
-        def _dedup() -> str:
-            marker = os.path.join(checkpoint_dir, "dedup_epoch_log")
-            if _epoch_committed(marker, epoch_id, qid):
+        def run() -> str:
+            if s.replay == "marker" and _epoch_committed(
+                marker, epoch_id, qid
+            ):
                 return "replayed-skip"
-            dedup_flag_batch(
-                pinned,
-                dedup_index_path,
-                dedup_flags_path,
-                text_col,
-                key_col,
-                num_hashes,
-                bands,
-                n,
-                epoch_id=epoch_id,
-                scope=qid,
+            done = s.apply(
+                pinned, reduced if s.name in takes_reduce else None,
+                epoch_id, ctx,
             )
-            _commit_epoch(marker, epoch_id, qid)
-            return "applied"
-
-        sections.append(("dedup", _dedup))
-    else:
-        outcome["dedup"] = "disabled"
-    if bm25_index_path is not None:
-
-        def _bm25() -> str:
-            marker = os.path.join(checkpoint_dir, "bm25_epoch_log")
-            if _epoch_committed(marker, epoch_id, qid):
+            if s.replay == "marker":
+                _commit_epoch(marker, epoch_id, qid)
+            if s.replay == "pointer" and not done:
                 return "replayed-skip"
-            bm25_ingest_batch(pinned, bm25_index_path, text_col, key_col)
-            _commit_epoch(marker, epoch_id, qid)
             return "applied"
 
-        sections.append(("bm25", _bm25))
-    else:
-        outcome["bm25"] = "disabled"
-    if ann_index_path is not None:
+        return run
 
-        def _ann() -> str:
-            marker = os.path.join(checkpoint_dir, "ann_epoch_log")
-            if _epoch_committed(marker, epoch_id, qid):
-                return "replayed-skip"
-            ann_ingest_batch(
-                pinned, ann_index_path, ann_vec_col,
-                ann_key_col or key_col, ann_kind,
-            )
-            _commit_epoch(marker, epoch_id, qid)
-            return "applied"
-
-        sections.append(("ann", _ann))
-    else:
-        outcome["ann"] = "disabled"
-    if agg_view_path is not None:
-
-        def _aggview() -> str:
-            # replay-safe by its OWN epoch pointer + persisted deltas
-            # (streaming/agg_view.py replay contract) — no checkpoint
-            # marker needed; a replayed epoch short-circuits inside
-            from pymongo_change_stream_reader_spark.streaming.agg_view import (
-                agg_view_batch,
-            )
-
-            applied = agg_view_batch(
-                pinned,
-                agg_view_path,
-                int(epoch_id),
-                group_path=agg_group_path,
-                value_path=agg_value_path,
-                value_type=agg_value_type,
-                n_buckets=n_buckets,
-                retain=retain,
-                track_minmax=agg_track_minmax,
-                reduced=shared_reduced,
-            )
-            return "applied" if applied else "replayed-skip"
-
-        sections.append(("aggview", _aggview))
-    else:
-        outcome["aggview"] = "disabled"
-    if join_view_path is not None:
-
-        def _joinview() -> str:
-            # replay-safe by its OWN epoch pointer + persisted deltas
-            # (streaming/join_view.py replay contract)
-            from pymongo_change_stream_reader_spark.streaming.join_view import (
-                join_view_batch,
-            )
-
-            applied = join_view_batch(
-                pinned,
-                join_view_path,
-                int(epoch_id),
-                side_path=join_side_path,
-                fact_side=join_fact_side,
-                dim_side=join_dim_side,
-                fk_path=join_fk_path,
-                dim_id_path=join_dim_id_path,
-                n_buckets=n_buckets,
-                retain=retain,
-                join_type=join_join_type,
-                reduced=shared_reduced,
-            )
-            return "applied" if applied else "replayed-skip"
-
-        sections.append(("joinview", _joinview))
-    else:
-        outcome["joinview"] = "disabled"
-    if star_view_path is not None:
-
-        def _starview() -> str:
-            # replay-safe by its OWN epoch pointer + persisted deltas
-            # (streaming/star_view.py replay contract)
-            from pymongo_change_stream_reader_spark.streaming.star_view import (
-                DimSide,
-                star_view_batch,
-            )
-
-            dims = [
-                d if isinstance(d, DimSide) else DimSide(**d)
-                for d in (star_view_dims or [])
-            ]
-            applied = star_view_batch(
-                pinned,
-                star_view_path,
-                int(epoch_id),
-                dims,
-                side_path=star_side_path,
-                fact_side=star_fact_side,
-                n_buckets=n_buckets,
-                retain=retain,
-                join_type=star_join_type,
-                reduced=shared_reduced,
-            )
-            return "applied" if applied else "replayed-skip"
-
-        sections.append(("starview", _starview))
-    else:
-        outcome["starview"] = "disabled"
-    if er_registry_path is not None:
-
-        def _erregistry() -> str:
-            # replay-safe by its OWN epoch pointer + persisted deltas
-            # (streaming/er_registry.py replay contract)
-            from pymongo_change_stream_reader_spark.streaming.er_registry import (
-                er_registry_cdc_batch,
-            )
-
-            applied = er_registry_cdc_batch(
-                pinned,
-                er_registry_path,
-                int(epoch_id),
-                er_spec,
-                id_path=er_id_path,
-                field_paths=er_field_paths,
-                n_buckets=n_buckets,
-                retain=retain,
-                reduced=shared_reduced,
-                # observability: skipped_ids / edges / candidates /
-                # merged_entities accumulate per epoch — a
-                # misconfigured ER_ID_PATH shows up as a growing
-                # skipped_ids, not a silent no-op
-                stats=None
-                if store_stats is None
-                else store_stats.setdefault("erregistry", {}).setdefault(
-                    f"epoch_{int(epoch_id)}", {}
-                ),
-            )
-            return "applied" if applied else "replayed-skip"
-
-        sections.append(("erregistry", _erregistry))
-    else:
-        outcome["erregistry"] = "disabled"
-
-    if max_parallel_stores > 1 and len(sections) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(max_parallel_stores, len(sections)),
-            thread_name_prefix="composed-store",
-        ) as pool:
-            futures = [
-                (name, pool.submit(_timed, name, fn))
-                for name, fn in sections
-            ]
-            first_err: BaseException | None = None
-            for name, fut in futures:
-                try:
-                    outcome[name] = fut.result()
-                except BaseException as exc:
-                    outcome[name] = "failed"
-                    if first_err is None:
-                        first_err = exc
-                    else:
-                        logger.error(
-                            "composed relay: store %r also failed for "
-                            "epoch %s: %s",
-                            name, epoch_id, exc,
-                        )
-            if first_err is not None:
-                raise first_err
-    else:
-        for name, fn in sections:
-            outcome[name] = _timed(name, fn)
+    outcome = {s.name: "disabled" for s in STORES}
+    workers = min(max_parallel_stores, len(enabled))
+    if workers < 2:
+        for s in enabled:
+            outcome[s.name] = _timed(s.name, _section(s))
+        return outcome
+    with ThreadPoolExecutor(
+        workers, thread_name_prefix="composed-store"
+    ) as pool:
+        futures = [
+            (s.name, pool.submit(_timed, s.name, _section(s)))
+            for s in enabled
+        ]
+    errors = [(n, f.exception()) for n, f in futures if f.exception()]
+    for name, exc in errors[1:]:
+        logger.error(
+            "composed relay: %s also failed for epoch %s: %s",
+            name, epoch_id, exc,
+        )
+    if errors:
+        raise errors[0][1]
+    outcome.update((n, f.result()) for n, f in futures)
     return outcome
+
+
+def _check(kw: dict, checkpoint_dir: str) -> None:
+    """Refuse at stream start what would otherwise fail mid-stream on
+    the first non-empty batch."""
+    enabled = [s for s in STORES if any(kw[p] is not None for p in s.paths)]
+    if not enabled:
+        names = ", ".join("+".join(s.paths) for s in STORES)
+        raise ValueError(
+            f"composed relay: enable at least one store ({names})"
+        )
+    _require_local_path(checkpoint_dir, "checkpoint_dir")
+    for s in enabled:
+        for p in s.paths:
+            if kw[p] is None:
+                raise ValueError(
+                    f"composed relay: {s.name} needs BOTH "
+                    + " and ".join(s.paths)
+                )
+            _require_local_path(kw[p], p)
+        for k in s.required:
+            if not kw[k]:
+                raise ValueError(f"composed relay: {s.paths[0]} needs {k}")
+        for k, allowed in s.choices:
+            if kw[k] not in allowed:
+                raise ValueError(
+                    f"composed relay: {k} must be one of {allowed}, "
+                    f"got {kw[k]!r}"
+                )
 
 
 def start_composed_relay(
     events: DataFrame,
     checkpoint_dir: str,
-    replica_path: str | None = None,
-    dedup_index_path: str | None = None,
-    dedup_flags_path: str | None = None,
-    bm25_index_path: str | None = None,
-    text_col: str = "fullDocument",
-    key_col: str = "documentKey",
-    n_buckets: int = 16,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    retain: int = 2,
+    *,
     trigger_interval: str | None = None,
-    ann_index_path: str | None = None,
-    ann_vec_col: str = "embedding",
-    ann_key_col: str | None = None,
-    ann_kind: str = "ivf",
     max_parallel_stores: int = 4,
-    agg_view_path: str | None = None,
-    agg_group_path: str = "$.g",
-    agg_value_path: str = "$.v",
-    agg_value_type: str = "double",
-    agg_track_minmax: bool = False,
-    join_view_path: str | None = None,
-    join_side_path: str = "$.side",
-    join_fact_side: str = "f",
-    join_dim_side: str = "d",
-    join_fk_path: str = "$.fk",
-    join_dim_id_path: str | None = "$._id",
-    join_join_type: str = "inner",
-    star_view_path: str | None = None,
-    star_view_dims: list | None = None,
-    star_side_path: str = "$.side",
-    star_fact_side: str = "f",
-    star_join_type: str = "left",
-    er_registry_path: str | None = None,
-    er_spec=None,
-    er_id_path: str = "$._id",
-    er_field_paths: dict | None = None,
+    **stores,
 ):
-    """Streaming entry point: one stream, one source read per trigger,
-    every enabled store maintained.  Enable a store by passing its
-    path(s); at least one must be enabled.  ``max_parallel_stores``
-    overlaps the independent store applies (see composed_apply_batch;
-    1 = strictly sequential).  ``agg_view_path`` adds the incremental
-    aggregate view (streaming/agg_view.py) as a fifth store;
-    ``join_view_path`` adds the incremental fact-join-dim view
-    (streaming/join_view.py) as a sixth, ``star_view_path`` the
-    N-dim star view as a seventh, and ``er_registry_path`` (+
-    ``er_spec``/``er_field_paths`` — see er_spec_from_config) the
-    persisted entity-resolution registry as an eighth; like the
-    serving indexes they need post-images
-    (fullDocument=updateLookup)."""
-    if (
-        replica_path is None
-        and dedup_index_path is None
-        and bm25_index_path is None
-        and ann_index_path is None
-        and agg_view_path is None
-        and join_view_path is None
-        and star_view_path is None
-        and er_registry_path is None
-    ):
-        raise ValueError(
-            "composed relay: enable at least one store (replica_path, "
-            "dedup_index_path(+dedup_flags_path), bm25_index_path, "
-            "ann_index_path, agg_view_path, join_view_path, "
-            "star_view_path, or er_registry_path)"
-        )
-    if er_registry_path is not None and (
-        er_spec is None or not er_field_paths
-    ):
-        raise ValueError(
-            "composed relay: er_registry_path needs er_spec and "
-            "er_field_paths (er_spec_from_config builds both)"
-        )
-    if (dedup_index_path is None) != (dedup_flags_path is None):
-        raise ValueError(
-            "composed relay: dedup needs BOTH dedup_index_path and "
-            "dedup_flags_path"
-        )
-    if ann_index_path is not None:
-        from pymongo_change_stream_reader_spark.streaming.ann_relay import (
-            _require_kind,
-        )
-
-        _require_kind(ann_kind, "start_composed_relay")
-    _require_local_path(checkpoint_dir, "checkpoint_dir")
-    for p, name in (
-        (replica_path, "replica_path"),
-        (dedup_index_path, "dedup_index_path"),
-        (dedup_flags_path, "dedup_flags_path"),
-        (bm25_index_path, "bm25_index_path"),
-        (ann_index_path, "ann_index_path"),
-        (agg_view_path, "agg_view_path"),
-        (join_view_path, "join_view_path"),
-        (star_view_path, "star_view_path"),
-        (er_registry_path, "er_registry_path"),
-    ):
-        if p is not None:
-            _require_local_path(p, name)
+    """Streaming entry point: one source read per trigger, every store
+    enabled in ``stores`` (the ``STORES`` keywords; at least one)
+    maintained.  The indexes and views fold post-images
+    (fullDocument=updateLookup).  ``max_parallel_stores`` as in
+    composed_apply_batch (1 = strictly sequential)."""
+    _check(_resolve(stores), checkpoint_dir)
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         composed_apply_batch(
-            batch_df,
-            epoch_id,
-            checkpoint_dir,
-            replica_path,
-            dedup_index_path,
-            dedup_flags_path,
-            bm25_index_path,
-            text_col,
-            key_col,
-            n_buckets,
-            num_hashes,
-            bands,
-            n,
-            retain,
-            ann_index_path=ann_index_path,
-            ann_vec_col=ann_vec_col,
-            ann_key_col=ann_key_col,
-            ann_kind=ann_kind,
-            max_parallel_stores=max_parallel_stores,
-            agg_view_path=agg_view_path,
-            agg_group_path=agg_group_path,
-            agg_value_path=agg_value_path,
-            agg_value_type=agg_value_type,
-            agg_track_minmax=agg_track_minmax,
-            join_view_path=join_view_path,
-            join_side_path=join_side_path,
-            join_fact_side=join_fact_side,
-            join_dim_side=join_dim_side,
-            join_fk_path=join_fk_path,
-            join_dim_id_path=join_dim_id_path,
-            join_join_type=join_join_type,
-            star_view_path=star_view_path,
-            star_view_dims=star_view_dims,
-            star_side_path=star_side_path,
-            star_fact_side=star_fact_side,
-            star_join_type=star_join_type,
-            er_registry_path=er_registry_path,
-            er_spec=er_spec,
-            er_id_path=er_id_path,
-            er_field_paths=er_field_paths,
+            batch_df, epoch_id, checkpoint_dir,
+            max_parallel_stores=max_parallel_stores, **stores,
         )
 
     writer = (

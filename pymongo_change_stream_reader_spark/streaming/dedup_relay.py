@@ -31,8 +31,8 @@ Per micro-batch:
    key (append_lsh_index track_generations) — cost scales with the
    batch, never the corpus.
 
-Replay safety: the epoch-marker pattern from the Kafka sink
-(streaming/kafka_sink.py) short-circuits replayed epochs.  A crash
+Replay safety: the composed relay's per-store epoch marker
+(streaming/composed_relay.py) short-circuits replayed epochs.  A crash
 between the writes and the marker replays the batch: step 2 then
 retires the crashed attempt's own sketches (they registered as the
 live generation), step 4 overwrites the same epoch partition, and
@@ -67,10 +67,7 @@ from pymongo_change_stream_reader_spark.operators.maintenance import (
     IndexWriteLock,
 )
 from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
-    _commit_epoch,
     _dir_has_parquet,
-    _epoch_committed,
-    _query_id,
     _require_local_path,
 )
 
@@ -248,56 +245,6 @@ def dedup_flag_batch(
         track_generations=True, band_table=band,
     )
     return n_flags
-
-
-def start_streaming_dedup(
-    events: DataFrame,
-    index_path: str,
-    flags_path: str,
-    checkpoint_dir: str,
-    text_col: str = "fullDocument",
-    key_col: str = "documentKey",
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    trigger_interval: str | None = None,
-):
-    """Streaming entry point: foreachBatch probe-then-append with
-    epoch-marker replay protection."""
-    _require_local_path(checkpoint_dir, "checkpoint_dir")
-    _require_local_path(index_path, "index_path")
-    _require_local_path(flags_path, "flags_path")
-    marker_dir = os.path.join(checkpoint_dir, "epoch_log")
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        qid = _query_id(checkpoint_dir)
-        if _epoch_committed(marker_dir, epoch_id, qid):
-            logger.info("epoch %s already ingested; skipping replay", epoch_id)
-            return
-        if batch_df.isEmpty():
-            return
-        dedup_flag_batch(
-            batch_df,
-            index_path,
-            flags_path,
-            text_col,
-            key_col,
-            num_hashes,
-            bands,
-            n,
-            epoch_id=epoch_id,
-            scope=qid,
-        )
-        _commit_epoch(marker_dir, epoch_id, qid)
-
-    writer = (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def _compact_dedup_flags_locked(

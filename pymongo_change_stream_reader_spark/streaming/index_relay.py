@@ -17,8 +17,8 @@ Per micro-batch:
    gen 0, updated ids tombstone their live generation and re-ingest
    under the next one, deletes tombstone only — scores afterwards
    equal a from-scratch rebuild over the live corpus;
-3. the epoch marker (query-id scoped, streaming/kafka_sink.py) guards
-   replays: a redelivered batch cannot double-apply, and a crashed
+3. the composed relay's epoch marker (streaming/composed_relay.py)
+   guards replays: a redelivered batch cannot double-apply, and a crashed
    half-applied batch rolls back via the append journal BEFORE the
    replay re-applies (both the journal check and the recovery run
    INSIDE the index write lock — a pre-lock check could pass, block,
@@ -47,9 +47,6 @@ from pymongo_change_stream_reader_spark.operators.retrieval import (
     write_bm25_index,
 )
 from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
-    _commit_epoch,
-    _epoch_committed,
-    _query_id,
     _require_local_path,
 )
 
@@ -131,37 +128,3 @@ def bm25_ingest_batch(
         return _bm25_apply_locked(
             spark, index_path, upserts, deletes, "text", "doc_id"
         )
-
-
-def start_streaming_bm25_index(
-    events: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    text_col: str = "fullDocument",
-    key_col: str = "documentKey",
-    trigger_interval: str | None = None,
-):
-    """Streaming entry point: foreachBatch fold-into-index with
-    epoch-marker replay protection."""
-    _require_local_path(checkpoint_dir, "checkpoint_dir")
-    _require_local_path(index_path, "index_path")
-    marker_dir = os.path.join(checkpoint_dir, "epoch_log")
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        qid = _query_id(checkpoint_dir)
-        if _epoch_committed(marker_dir, epoch_id, qid):
-            logger.info("epoch %s already ingested; skipping replay", epoch_id)
-            return
-        if batch_df.isEmpty():
-            return
-        bm25_ingest_batch(batch_df, index_path, text_col, key_col)
-        _commit_epoch(marker_dir, epoch_id, qid)
-
-    writer = (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()

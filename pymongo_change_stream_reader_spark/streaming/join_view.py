@@ -105,7 +105,6 @@ __all__ = [
     "join_view_batch",
     "read_join_view",
     "compact_join_view",
-    "start_join_view_maintenance",
 ]
 
 _VIEW_COLS = ("key", "fk", "fact_doc", "dim_doc")
@@ -899,26 +898,6 @@ def _bucket_history_name(root: str) -> str:
     )
 
     return _bucket_history_files(root)[-1][len("_manifest.h-"):]
-
-
-def start_join_view_maintenance(
-    events: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_interval: str = "10 seconds",
-    **view_kw,
-):
-    """Wire :func:`join_view_batch` as a foreachBatch sink — the
-    join-view sibling of start_agg_view_maintenance."""
-    return (
-        events.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=trigger_interval)
-        .foreachBatch(
-            lambda b, e: join_view_batch(b, path, e, **view_kw)
-        )
-        .start()
-    )
 
 
 def compact_join_view(

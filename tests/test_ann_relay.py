@@ -141,8 +141,8 @@ def test_streaming_ann_index_two_batches_and_replay(spark, tmp_path):
     from pymongo_change_stream_reader_spark.sources.change_events import (
         stream_change_events_json,
     )
-    from pymongo_change_stream_reader_spark.streaming.ann_relay import (
-        start_streaming_ann_index,
+    from pymongo_change_stream_reader_spark.streaming.composed_relay import (
+        start_composed_relay,
     )
     import pymongo_change_stream_reader_spark.operators.similarity as sim
 
@@ -185,8 +185,9 @@ def test_streaming_ann_index_two_batches_and_replay(spark, tmp_path):
         )
 
     ckpt = str(tmp_path / "ckpt")
-    q = start_streaming_ann_index(
-        _stream(), index, ckpt, vec_col="embedding", key_col="vec_key"
+    q = start_composed_relay(
+        _stream(), ckpt, ann_index_path=index, ann_vec_col="embedding",
+        ann_key_col="vec_key",
     )
     try:
         q.processAllAvailable()
@@ -224,8 +225,9 @@ def test_streaming_ann_index_two_batches_and_replay(spark, tmp_path):
     # restart over the same source: epoch markers skip both batches —
     # the index files do not change
     files_before = sim._ann_list_files(index)
-    q2 = start_streaming_ann_index(
-        _stream(), index, ckpt, vec_col="embedding", key_col="vec_key"
+    q2 = start_composed_relay(
+        _stream(), ckpt, ann_index_path=index, ann_vec_col="embedding",
+        ann_key_col="vec_key",
     )
     try:
         q2.processAllAvailable()

@@ -164,8 +164,8 @@ def test_streaming_bm25_index_two_batches(spark, tmp_path):
     from pymongo_change_stream_reader_spark.sources.change_events import (
         stream_change_events_json,
     )
-    from pymongo_change_stream_reader_spark.streaming.index_relay import (
-        start_streaming_bm25_index,
+    from pymongo_change_stream_reader_spark.streaming.composed_relay import (
+        start_composed_relay,
     )
 
     texts = {
@@ -200,10 +200,10 @@ def test_streaming_bm25_index_two_batches(spark, tmp_path):
         )
     )
     index = str(tmp_path / "bm25")
-    q = start_streaming_bm25_index(
+    q = start_composed_relay(
         stream_change_events_json(spark, str(src)),
-        index,
         str(tmp_path / "ckpt"),
+        bm25_index_path=index,
     )
     try:
         q.processAllAvailable()

@@ -278,6 +278,22 @@ def test_composed_relay_validates_configuration(spark, tmp_path):
             str(tmp_path / "c"),
             dedup_index_path=str(tmp_path / "i"),
         )
+    # the view checks run at stream start, not inside the batch
+    # function on the first non-empty batch
+    dims = [{"side": "a", "fk_path": "$.fka"}]
+    for kw, msg in (
+        (dict(join_view_path=str(tmp_path / "j"), join_join_type="outer"),
+         "join_join_type"),
+        (dict(star_view_path=str(tmp_path / "s"), star_view_dims=dims,
+              star_join_type="full"), "star_join_type"),
+        (dict(star_view_path=str(tmp_path / "s")), "star_view_dims"),
+    ):
+        with pytest.raises(ValueError, match=msg):
+            start_composed_relay(events, str(tmp_path / "c"), **kw)
+    with pytest.raises(TypeError, match="replica_pth"):
+        start_composed_relay(
+            events, str(tmp_path / "c"), replica_pth=str(tmp_path / "r")
+        )
 
 
 def test_composed_relay_with_ann_store(spark, tmp_path):

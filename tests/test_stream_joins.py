@@ -332,6 +332,74 @@ def test_main_composed_wiring(spark, monkeypatch, tmp_path):
     assert kw["bm25_index_path"] == str(tmp_path / "bm25")
     assert dict(captured["events"].dtypes)["_ann_vec"] == "array<double>"
 
+    # all eight stores, every store setting off its default: the
+    # name-based mapping must enable every store and carry every store
+    # field of EngineSettings (a field it silently drops fails here)
+    import dataclasses
+    import json
+
+    from pymongo_change_stream_reader_spark.config import (
+        EngineSettings,
+        settings_from_env,
+    )
+
+    er_fields = [
+        {"name": "name", "path": "$.name", "dtype": "string",
+         "weight": 1.0, "scorer": "edit"},
+    ]
+    for k, v in {
+        "REPLICA_PATH": str(tmp_path / "replica"),
+        "REPLICA_BUCKETS": "8",
+        "DEDUP_INDEX_PATH": str(tmp_path / "lsh"),
+        "DEDUP_FLAGS_PATH": str(tmp_path / "flags"),
+        "ANN_KIND": "ivfpq",
+        "ANN_KEY_COL": "vec_key",
+        "AGG_VIEW_PATH": str(tmp_path / "agg"),
+        "AGG_GROUP_PATH": "$.k",
+        "AGG_VALUE_PATH": "$.cents",
+        "AGG_VALUE_TYPE": "long",
+        "AGG_TRACK_MINMAX": "true",
+        "JOIN_VIEW_PATH": str(tmp_path / "join"),
+        "JOIN_SIDE_PATH": "$.js",
+        "JOIN_FK_PATH": "$.jfk",
+        "JOIN_DIM_ID_PATH": "$.jid",
+        "JOIN_VIEW_JOIN_TYPE": "left",
+        "STAR_VIEW_PATH": str(tmp_path / "star"),
+        "STAR_VIEW_DIMS": '[{"side": "a", "fk_path": "$.fka"}]',
+        "STAR_SIDE_PATH": "$.ss",
+        "STAR_VIEW_JOIN_TYPE": "inner",
+        "ER_REGISTRY_PATH": str(tmp_path / "er"),
+        "ER_FIELDS": json.dumps(er_fields),
+        "ER_ID_PATH": "$.rid",
+        "ER_THRESHOLD": "0.7",
+        "ER_BLOCK_FIELD": "name",
+        "ER_BLOCK_KIND": "word_ngram",
+        "ER_BLOCK_PARAM": "2",
+        "ER_MAX_BLOCK": "50",
+        "ER_ID_MODE": "hashed",
+    }.items():
+        monkeypatch.setenv(k, v)
+    entry.main()
+    kw, cfg = captured["kw"], settings_from_env()
+    assert all(kw[p] is not None for s in cr.STORES for p in s.paths)
+    # the settings __main__ derives instead of passing through by name
+    assert kw["n_buckets"] == 8 and kw["ann_vec_col"] == "_ann_vec"
+    assert kw["er_field_paths"] == {"name": ("$.name", "string")}
+    spec = kw["er_spec"].fingerprint()
+    assert (spec["threshold"], spec["max_block_size"], spec["id_mode"],
+            spec["block_def"]) == (0.7, 50, "hashed", "word_ngram:2:name")
+    derived = {"replica_buckets", "ann_vec_col", "er_fields",
+               "er_threshold", "er_block_field", "er_block_kind",
+               "er_block_param", "er_max_block", "er_id_mode"}
+    prefixes = (
+        "replica_", "dedup_", "bm25_", "ann_", "agg_", "join_", "star_",
+        "er_",
+    )
+    for f in dataclasses.fields(EngineSettings):
+        if f.name.startswith(prefixes) and f.name not in derived:
+            assert f.name in kw, f"{f.name} not passed to the relay"
+            assert kw[f.name] == getattr(cfg, f.name), f.name
+
 
 def test_settings_star_view_env(monkeypatch):
     from pymongo_change_stream_reader_spark.config import settings_from_env

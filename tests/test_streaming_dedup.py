@@ -15,10 +15,12 @@ import pytest
 from pymongo_change_stream_reader_spark.sources.change_events import (
     stream_change_events_json,
 )
+from pymongo_change_stream_reader_spark.streaming.composed_relay import (
+    start_composed_relay,
+)
 from pymongo_change_stream_reader_spark.streaming.dedup_relay import (
     dedup_flag_batch,
     read_dedup_flags,
-    start_streaming_dedup,
 )
 
 LONG_A = (
@@ -58,8 +60,9 @@ def test_streaming_dedup_two_batches(spark, tmp_path):
     (src / "b0.json").write_text(
         "\n".join([_event("a1", "k1", LONG_A), _event("a2", "k2", LONG_B)])
     )
-    q = start_streaming_dedup(
-        stream_change_events_json(spark, str(src)), index, flags, ckpt
+    q = start_composed_relay(
+        stream_change_events_json(spark, str(src)), ckpt,
+        dedup_index_path=index, dedup_flags_path=flags,
     )
     try:
         q.processAllAvailable()
@@ -106,8 +109,9 @@ def test_dedup_flag_batch_replay_is_guarded_by_marker(spark, tmp_path):
     (src / "b0.json").write_text(_event("a1", "k1", LONG_A))
 
     for _ in range(2):  # run, stop, restart with same checkpoint
-        q = start_streaming_dedup(
-            stream_change_events_json(spark, str(src)), index, flags, ckpt
+        q = start_composed_relay(
+            stream_change_events_json(spark, str(src)), ckpt,
+            dedup_index_path=index, dedup_flags_path=flags,
         )
         try:
             q.processAllAvailable()
@@ -532,8 +536,9 @@ def test_compact_dedup_flags_streaming_replay_noop(spark, tmp_path):
     (src / "b0.json").write_text(_event("a0", "k0", LONG_A))
     (src / "b1.json").write_text(_event("a1", "k1", LONG_A, t=2))
     (src / "b2.json").write_text(_event("a2", "k2", LONG_A, t=3))
-    q = start_streaming_dedup(
-        stream_change_events_json(spark, str(src)), index, flags, ckpt
+    q = start_composed_relay(
+        stream_change_events_json(spark, str(src)), ckpt,
+        dedup_index_path=index, dedup_flags_path=flags,
     )
     try:
         q.processAllAvailable()
@@ -551,8 +556,9 @@ def test_compact_dedup_flags_streaming_replay_noop(spark, tmp_path):
     # restart over the same checkpoint (folded epochs replay as no-ops
     # through the offset log / markers) and feed one new batch
     (src / "b3.json").write_text(_event("a3", "k3", LONG_A, t=4))
-    q = start_streaming_dedup(
-        stream_change_events_json(spark, str(src)), index, flags, ckpt
+    q = start_composed_relay(
+        stream_change_events_json(spark, str(src)), ckpt,
+        dedup_index_path=index, dedup_flags_path=flags,
     )
     try:
         q.processAllAvailable()

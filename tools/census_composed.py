@@ -26,10 +26,11 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-STORES = (
-    "replica", "dedup", "bm25", "ann",
-    "aggview", "joinview", "starview", "erregistry",
+from pymongo_change_stream_reader_spark.streaming.composed_relay import (  # noqa: E402
+    STORES as _TABLE,
 )
+
+STORES = tuple(s.name for s in _TABLE)
 
 
 def main() -> None:
@@ -43,9 +44,9 @@ def main() -> None:
     out: dict = {}
     for store in only:
         skip = tuple(s for s in STORES if s != store and s != "replica")
-        # the replica cannot be skipped via skip_stores (it has no
-        # skip key) — a replica-only run skips everything else; for
-        # other stores subtract the replica-only figure offline
+        # every run keeps the replica — a replica-only run skips
+        # everything else; for other stores subtract the replica-only
+        # figure offline
         if store == "replica":
             skip = tuple(s for s in STORES if s != "replica")
         r = composed_relay_bench(spark, sf_dir, skip_stores=skip)
