@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pymongo_change_stream_reader_spark.operators.text import fingerprint, tokens
+from pymongo_change_stream_reader_spark.storage import dir_has_parquet
 
 
 # ---------------------------------------------------------------------------
@@ -701,14 +702,8 @@ def _lsh_with_gen(df: DataFrame) -> DataFrame:
 def _read_lsh_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
     """Dead (doc, gen) pairs of an index under update/delete relay
     maintenance, or None for a pure-append index."""
-    import os
-
     tpath = _lsh_tombstone_path(path)
-    if not os.path.isdir(tpath) or not any(
-        f.endswith(".parquet")
-        for _r, _d, files in os.walk(tpath)
-        for f in files
-    ):
+    if not dir_has_parquet(tpath):
         return None
     # distinct: a crash between tombstone write and the epoch marker
     # replays the write — duplicate dead pairs must not matter
@@ -816,11 +811,7 @@ def append_lsh_index(
     spark = df_new.sparkSession
     with IndexWriteLock(_lsh_lock_path(path)):
         reg_path = _lsh_registry_path(path)
-        has_rows = _os.path.isdir(path) and any(
-            f.endswith(".parquet")
-            for _r, _d, files in _os.walk(path)
-            for f in files
-        )
+        has_rows = dir_has_parquet(path)
         if has_rows:
             # the gen-tag check needs a driver-side footer/schema
             # inference over the WHOLE band table — a per-batch cost
@@ -930,11 +921,7 @@ def tombstone_lsh_docs(ids: DataFrame, path: str, id_col: str = "doc") -> int:
     reg_path = _lsh_registry_path(path)
     with IndexWriteLock(_lsh_lock_path(path)):
         if not os.path.isdir(reg_path):
-            if os.path.isdir(path) and any(
-                f.endswith(".parquet")
-                for _r, _d, files in os.walk(path)
-                for f in files
-            ):
+            if dir_has_parquet(path):
                 # stored sketches with no registry: silently returning
                 # 0 would leave deleted docs matching probes forever
                 # (r6 advice) — refuse until the registry is seeded

@@ -63,7 +63,7 @@ class IndexWriteLock:
     acquisition BLOCKS up to ``timeout_s`` — so an append arriving
     during a long compaction waits instead of failing the streaming
     query.  Index paths are local-filesystem by contract
-    (_require_local_path), where flock is reliable."""
+    (storage.require_local_path), where flock is reliable."""
 
     def __init__(
         self,
@@ -254,8 +254,8 @@ def compact_bm25_index(
         _load_consts,
         _read_tombstones,
         _with_gen,
+        _recover_bm25_append_locked,
         _write_consts,
-        recover_bm25_append,
     )
 
     with bm25_lock(path):
@@ -263,7 +263,7 @@ def compact_bm25_index(
         # keep-set lists pre-compaction file names, so compacting over
         # a live journal and recovering later would delete every
         # compacted file — the whole index (review r6 finding #1)
-        recover_bm25_append(path)
+        _recover_bm25_append_locked(path)
         consts = _load_consts(spark, path)
         id_type = consts.get("id_type")
         sch = (

@@ -31,6 +31,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pymongo_change_stream_reader_spark.operators import text as tx
+from pymongo_change_stream_reader_spark.storage import (
+    ListingJournal,
+    dir_has_parquet,
+    write_atomic,
+)
 
 
 def _postings(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -190,7 +195,7 @@ def write_bm25_index(
 def _write_consts(
     path: str, n_docs: float, total_len: int, id_type: str | None = None
 ) -> None:
-    """Durable consts write (tmp + os.replace).  ``total_len`` (an
+    """Durable consts write (storage.write_atomic).  ``total_len`` (an
     exact integer) is stored alongside avgdl so incremental appends
     recompute avgdl EXACTLY as a from-scratch build would — doc
     lengths are ints, their double sum is exact below 2^53, so
@@ -203,16 +208,11 @@ def _write_consts(
     import json
     import os
 
-    tmp = os.path.join(path, "_consts.json.tmp")
     avgdl = (total_len / n_docs) if n_docs else 0.0
     consts = {"n_docs": n_docs, "avgdl": avgdl, "total_len": total_len}
     if id_type:
         consts["id_type"] = id_type
-    with open(tmp, "w") as fh:
-        json.dump(consts, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(path, "_consts.json"))
+    write_atomic(os.path.join(path, "_consts.json"), json.dumps(consts))
 
 
 _BM25_TABLES = ("postings", "doclen", "dfreq", "tombstones")
@@ -263,10 +263,7 @@ def _read_tombstones(
     its stored-dfreq scoring)."""
     import os
 
-    root = os.path.join(path, "tombstones")
-    if not os.path.isdir(root) or not any(
-        f.endswith(".parquet") for f in _list_table_files(path, "tombstones")
-    ):
+    if not dir_has_parquet(os.path.join(path, "tombstones")):
         return None
     return _bm25_read(spark, path, "tombstones", id_type).select(
         "doc_id", "gen"
@@ -293,17 +290,42 @@ def _live_bm25_tables(spark, path: str, id_type: str | None = None):
     )
 
 
-def _list_table_files(path: str, table: str) -> list[str]:
+def _bm25_journal(path: str) -> ListingJournal:
+    """The append journal: every table's file listing plus the consts,
+    written BEFORE an apply's first durable write."""
     import os
 
-    root = os.path.join(path, table)
-    out = []
-    for r, _dirs, files in os.walk(root):
-        rel = os.path.relpath(r, root)
-        out.extend(
-            f if rel == "." else os.path.join(rel, f) for f in files
-        )
-    return sorted(out)
+    return ListingJournal(
+        os.path.join(path, "_append_journal.json"),
+        {("files", t): os.path.join(path, t) for t in _BM25_TABLES},
+        f"BM25 index at {path!r} has a crashed-append journal — "
+        "run recover_bm25_append() first",
+    )
+
+
+def _recover_bm25_append_locked(path: str) -> bool:
+    """Rollback body of recover_bm25_append — callers hold
+    bm25_lock(path) (flock is not reentrant across fds within a
+    process, so this must never re-acquire it)."""
+    import os
+    import shutil
+
+    # a crashed FUSED append may leave its staging dir behind whether
+    # or not the journal survived — always clear it (it is never part
+    # of any table listing)
+    shutil.rmtree(os.path.join(path, _BM25_FUSED_TMP), ignore_errors=True)
+    journal = _bm25_journal(path)
+    body = journal.rollback()
+    if body is None:
+        return False
+    c = body["consts"]
+    _write_consts(
+        path, c["n_docs"], c["total_len"], id_type=c.get("id_type")
+    )
+    # the journal goes only once the consts are restored: a recovery
+    # that crashes before this point leaves it live to be re-run
+    journal.commit()
+    return True
 
 
 def recover_bm25_append(path: str) -> bool:
@@ -313,35 +335,15 @@ def recover_bm25_append(path: str) -> bool:
     restores the consts — the index returns to its exact pre-append
     state and the batch can be re-applied cleanly (the streaming
     consumer does this automatically; its epoch marker commits only
-    after a full append).  Returns True if a rollback happened."""
-    import json
-    import os
-
-    import shutil
-
-    jpath = os.path.join(path, "_append_journal.json")
-    # a crashed FUSED append may leave its staging dir behind whether
-    # or not the journal survived — always clear it (it is never part
-    # of any table listing)
-    shutil.rmtree(os.path.join(path, _BM25_FUSED_TMP), ignore_errors=True)
-    if not os.path.exists(jpath):
-        return False
-    with open(jpath) as fh:
-        journal = json.load(fh)
-    for table in _BM25_TABLES:
-        # journals written before the update/delete path existed have
-        # no tombstones listing — and no tombstone files to roll back
-        keep = set(journal["files"].get(table, []))
-        root = os.path.join(path, table)
-        for rel in _list_table_files(path, table):
-            if rel not in keep:
-                os.unlink(os.path.join(root, rel))
-    c = journal["consts"]
-    _write_consts(
-        path, c["n_docs"], c["total_len"], id_type=c.get("id_type")
+    after a full append).  Takes the index write lock: a recovery
+    racing a live append would delete that append's files and
+    journal.  Returns True if a rollback happened."""
+    from pymongo_change_stream_reader_spark.operators.maintenance import (
+        bm25_lock,
     )
-    os.unlink(jpath)
-    return True
+
+    with bm25_lock(path):
+        return _recover_bm25_append_locked(path)
 
 
 def _load_consts(spark, path: str) -> dict:
@@ -360,16 +362,6 @@ def _load_consts(spark, path: str) -> dict:
             or 0
         )
     return consts
-
-
-def _check_no_journal(path: str) -> None:
-    import os
-
-    if os.path.exists(os.path.join(path, "_append_journal.json")):
-        raise RuntimeError(
-            f"BM25 index at {path!r} has a crashed-append journal — "
-            "run recover_bm25_append() first"
-        )
 
 
 def _bm25_apply_locked(
@@ -418,7 +410,6 @@ def _bm25_apply_locked(
     (reference change_handler.py:11,43-48) — expressed as batch-sized
     appends plus a tombstone set instead of per-row index mutations.
     """
-    import json
     import os
 
     consts = _load_consts(spark, path)
@@ -544,24 +535,15 @@ def _bm25_apply_locked(
         n_dead, dead_len = by_side[1]["n"], by_side[1]["len"]
         if not n_new and not n_dead:
             return {"upserted": 0, "tombstoned": 0}
-        # journal BEFORE the first durable write (tmp+fsync+replace)
+        # journal BEFORE the first durable write
         jconsts = {
             "n_docs": consts["n_docs"],
             "total_len": consts["total_len"],
         }
         if id_type is not None:
             jconsts["id_type"] = id_type
-        journal = {
-            "files": {t: _list_table_files(path, t) for t in _BM25_TABLES},
-            "consts": jconsts,
-        }
-        jpath = os.path.join(path, "_append_journal.json")
-        jtmp = jpath + ".tmp"
-        with open(jtmp, "w") as fh:
-            json.dump(journal, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(jtmp, jpath)
+        journal = _bm25_journal(path)
+        journal.begin(consts=jconsts)
         # Batch frames per table dir.  Crash safety is identical for
         # both write shapes below: the journal above lists every
         # table's pre-append files, and recovery deletes unknown files
@@ -583,7 +565,7 @@ def _bm25_apply_locked(
             frames.append(("tombstones", existing.select("doc_id", "gen")))
         if id_type is not None and len(frames) > 1:
             # ONE fused tagged write (r15, the stores'
-            # _commit_bucketed_fused pattern): union the per-table
+            # commit_bucketed_fused pattern): union the per-table
             # frames over the superset columns with an __fstore tag,
             # write once partitioned by it into a staging dir, then
             # RENAME each partition dir's files into its table dir —
@@ -670,7 +652,7 @@ def _bm25_apply_locked(
             consts["total_len"] + int(new_len or 0) - int(dead_len or 0),
             id_type=id_type or dict(raw_doclen.dtypes)["doc_id"],
         )
-        os.unlink(jpath)  # commit point: the apply is complete
+        journal.commit()  # commit point: the apply is complete
         return {"upserted": int(n_new), "tombstoned": int(n_dead)}
     finally:
         post.unpersist()
@@ -704,7 +686,7 @@ def append_bm25_index(
         # a pre-lock check, blocked, and woke after the holder crashed
         # would append over half-applied state and bake the corruption
         # into its own journal (ADVICE r5 medium)
-        _check_no_journal(path)
+        _bm25_journal(path).refuse_if_live()
         return _bm25_apply_locked(
             spark,
             path,
@@ -735,7 +717,7 @@ def upsert_bm25_index(
 
     spark = docs.sparkSession
     with bm25_lock(path):
-        _check_no_journal(path)
+        _bm25_journal(path).refuse_if_live()
         return _bm25_apply_locked(spark, path, docs, None, text_col, id_col)
 
 
@@ -752,7 +734,7 @@ def delete_from_bm25_index(
 
     spark = ids.sparkSession
     with bm25_lock(path):
-        _check_no_journal(path)
+        _bm25_journal(path).refuse_if_live()
         return _bm25_apply_locked(spark, path, None, ids, "text", id_col)
 
 

@@ -23,6 +23,11 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pymongo_change_stream_reader_spark.storage import (
+    ListingJournal,
+    dir_has_parquet,
+)
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -500,88 +505,32 @@ def _ann_tombstone_path(path: str) -> str:
     return path.rstrip("/") + "_tombstones"
 
 
-def _ann_journal_path(path: str) -> str:
-    # a SIBLING file (like the .writelock): the compaction swap renames
-    # the index dir itself, and a journal inside it would ride through
-    # the swap with stale listings
-    return path.rstrip("/") + ".append_journal.json"
-
-
-def _ann_list_files(root: str) -> list[str]:
-    """Recursive relative file listing of a local index/tombstone dir
-    ([] when absent) — the rollback unit of the append journal."""
-    import os
-
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for r, _d, files in os.walk(root):
-        rel = os.path.relpath(r, root)
-        out.extend(f if rel == "." else os.path.join(rel, f) for f in files)
-    return sorted(out)
-
-
-def _ann_write_journal(path: str) -> None:
-    """Durably record the index + tombstone-sidecar file listings
-    BEFORE the first write of an append/update/delete (tmp + fsync +
-    replace — the BM25 journal contract, retrieval.py): a crash at any
-    later point is rolled back by recover_ann_append deleting every
-    file not in the listing.  Caller holds the index write lock and
-    has verified no live journal."""
-    import json
-    import os
-
-    jpath = _ann_journal_path(path)
-    journal = {
-        "index_files": _ann_list_files(path),
-        "tombstone_files": _ann_list_files(_ann_tombstone_path(path)),
-    }
-    tmp = jpath + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(journal, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, jpath)
-
-
-def _ann_check_no_journal(path: str) -> None:
-    import os
-
-    if os.path.exists(_ann_journal_path(path)):
-        raise RuntimeError(
-            f"ANN index at {path!r} has a crashed-append journal — run "
-            "recover_ann_append() first (compaction also rolls a crashed "
-            "append back before rewriting)"
-        )
+def _ann_journal(path: str) -> ListingJournal:
+    """The append journal: index + tombstone-sidecar file listings,
+    written BEFORE the first write of an append/update/delete.  A
+    SIBLING file (like the .writelock): the compaction swap renames
+    the index dir itself, and a journal inside it would ride through
+    the swap with stale listings."""
+    return ListingJournal(
+        path.rstrip("/") + ".append_journal.json",
+        {
+            ("index_files",): path,
+            ("tombstone_files",): _ann_tombstone_path(path),
+        },
+        f"ANN index at {path!r} has a crashed-append journal — run "
+        "recover_ann_append() first (compaction also rolls a crashed "
+        "append back before rewriting)",
+    )
 
 
 def _recover_ann_append_locked(path: str) -> bool:
     """Rollback body of recover_ann_append — callers hold the index
     write lock (flock is not reentrant across fds within a process, so
     this must never re-acquire it)."""
-    import json
-    import os
-
-    jpath = _ann_journal_path(path)
-    if not os.path.exists(jpath):
+    journal = _ann_journal(path)
+    if journal.rollback() is None:
         return False
-    with open(jpath) as fh:
-        journal = json.load(fh)
-    for root, keep in (
-        (path, set(journal["index_files"])),
-        (_ann_tombstone_path(path), set(journal["tombstone_files"])),
-    ):
-        for rel in _ann_list_files(root):
-            if rel not in keep:
-                os.unlink(os.path.join(root, rel))
-        # drop dirs the crashed write created (a new cell partition; a
-        # first-update tombstone sidecar): empty dirs read fine, but
-        # the tree should return to its exact pre-append state
-        if os.path.isdir(root):
-            for r, _dirs, _files in os.walk(root, topdown=False):
-                if r != path and not os.listdir(r):
-                    os.rmdir(r)
-    os.unlink(jpath)
+    journal.commit()
     return True
 
 
@@ -607,14 +556,8 @@ def _read_ann_tombstones(spark, path: str, idx_id_col: str):
     maintenance, or None for a pure-append index.  Same sidecar
     contract as the LSH/BM25 tombstone sets (bounded — the index
     compactor purges and clears it)."""
-    import os
-
     tpath = _ann_tombstone_path(path)
-    if not os.path.isdir(tpath) or not any(
-        f.endswith(".parquet")
-        for _r, _d, files in os.walk(tpath)
-        for f in files
-    ):
+    if not dir_has_parquet(tpath):
         return None
     return spark.read.parquet(tpath).select(idx_id_col, "gen").distinct()
 
@@ -625,7 +568,7 @@ def _ann_live_read(spark, path: str, idx_id_col: str) -> DataFrame:
     broadcast anti-join.  Refuses a live crashed-append journal — a
     half-applied update may have tombstoned ids whose replacement rows
     never landed."""
-    _ann_check_no_journal(path)
+    _ann_journal(path).refuse_if_live()
     df = spark.read.parquet(path)
     if "gen" not in df.columns:
         df = df.withColumn("gen", F.lit(0))
@@ -879,7 +822,7 @@ def append_ivf_index(
     with IndexWriteLock(path.rstrip("/") + ".writelock"):
         # journal check INSIDE the lock (a writer that checked before
         # blocking could wake over a holder's half-applied crash)
-        _ann_check_no_journal(path)
+        _ann_journal(path).refuse_if_live()
         with open(os.path.join(path, "_centroids.json")) as fh:
             cents = json.load(fh)
         assigned = _cell_assignment(
@@ -891,7 +834,7 @@ def append_ivf_index(
         # journal BEFORE the first durable write: the update path is
         # two appends (tombstones, then data) — a crash between them
         # would otherwise silently DELETE the updated ids
-        _ann_write_journal(path)
+        _ann_journal(path).begin()
         try:
             assigned_g, _ = _ann_apply_gens(
                 spark, path, assigned, "neighbor_id", check_new_ids,
@@ -901,7 +844,7 @@ def append_ivf_index(
         except BaseException:
             _recover_ann_append_locked(path)
             raise
-        os.unlink(_ann_journal_path(path))
+        _ann_journal(path).commit()
     return n_new
 
 
@@ -939,8 +882,6 @@ def _ann_apply_batch_locked(
     a distinct-id frame in ``idx_id_col``.  Returns {"upserted": n,
     "tombstoned": m} with m counting deletes AND update collisions —
     the BM25 convention (_bm25_apply_locked)."""
-    import os
-
     if new_rows is None and dels is None:
         return {"upserted": 0, "tombstoned": 0}
     raw = spark.read.parquet(path)
@@ -1014,7 +955,7 @@ def _ann_apply_batch_locked(
     n_new = int(counts.get(3, 0))
     if not n_new and not n_tomb:
         return {"upserted": 0, "tombstoned": 0}
-    _ann_write_journal(path)
+    _ann_journal(path).begin()
     try:
         if n_tomb or n_coll:
             probe.filter(F.col("t").isin(0, 1)).select(
@@ -1031,7 +972,7 @@ def _ann_apply_batch_locked(
     except BaseException:
         _recover_ann_append_locked(path)
         raise
-    os.unlink(_ann_journal_path(path))
+    _ann_journal(path).commit()
     return {"upserted": int(n_new), "tombstoned": int(n_tomb) + int(n_coll)}
 
 
@@ -1111,7 +1052,7 @@ def upsert_ivf_index(
         )
     spark = (new_vecs if new_vecs is not None else delete_ids).sparkSession
     with IndexWriteLock(path.rstrip("/") + ".writelock"):
-        _ann_check_no_journal(path)
+        _ann_journal(path).refuse_if_live()
         return _ivf_apply_locked(
             spark, path, new_vecs, delete_ids, id_col, vec_col
         )
@@ -1631,7 +1572,7 @@ def _ann_upsert_entry(
         raise ValueError(f"{op_name}: pass new_vecs, delete_ids, or both")
     spark = (new_vecs if new_vecs is not None else delete_ids).sparkSession
     with IndexWriteLock(path.rstrip("/") + ".writelock"):
-        _ann_check_no_journal(path)
+        _ann_journal(path).refuse_if_live()
         return _ann_code_apply_locked(
             spark, path, new_vecs, delete_ids, id_col, op_name,
             model_file, encode, partition_by,
@@ -1695,12 +1636,10 @@ def delete_from_ivf_index(
         IndexWriteLock,
     )
 
-    import os
-
     spark = ids.sparkSession
     with IndexWriteLock(path.rstrip("/") + ".writelock"):
-        _ann_check_no_journal(path)
-        _ann_write_journal(path)
+        _ann_journal(path).refuse_if_live()
+        _ann_journal(path).begin()
         try:
             n = _ann_delete(
                 spark,
@@ -1711,7 +1650,7 @@ def delete_from_ivf_index(
         except BaseException:
             _recover_ann_append_locked(path)
             raise
-        os.unlink(_ann_journal_path(path))
+        _ann_journal(path).commit()
         return n
 
 
@@ -1724,18 +1663,16 @@ def delete_from_pq_index(
         IndexWriteLock,
     )
 
-    import os
-
     spark = ids.sparkSession
     with IndexWriteLock(path.rstrip("/") + ".writelock"):
-        _ann_check_no_journal(path)
-        _ann_write_journal(path)
+        _ann_journal(path).refuse_if_live()
+        _ann_journal(path).begin()
         try:
             n = _ann_delete(spark, path, ids.select(id_col), id_col)
         except BaseException:
             _recover_ann_append_locked(path)
             raise
-        os.unlink(_ann_journal_path(path))
+        _ann_journal(path).commit()
         return n
 
 
@@ -1767,7 +1704,7 @@ def append_pq_index(
     spark = new_vecs.sparkSession
     # sidecar read under the lock — see append_ivf_index
     with IndexWriteLock(path.rstrip("/") + ".writelock"):
-        _ann_check_no_journal(path)
+        _ann_journal(path).refuse_if_live()
         with open(os.path.join(path, "_codebooks.json")) as fh:
             books = json.load(fh)
         encoded = pq_encode(new_vecs, books, id_col, vec_col).localCheckpoint(
@@ -1778,7 +1715,7 @@ def append_pq_index(
             return 0
         # journal before the tombstone+data write pair — see
         # append_ivf_index
-        _ann_write_journal(path)
+        _ann_journal(path).begin()
         try:
             encoded_g, _ = _ann_apply_gens(
                 spark, path, encoded, id_col, check_new_ids,
@@ -1788,7 +1725,7 @@ def append_pq_index(
         except BaseException:
             _recover_ann_append_locked(path)
             raise
-        os.unlink(_ann_journal_path(path))
+        _ann_journal(path).commit()
     return n_new
 
 

@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """A quarter of host RAM, clamped to 2-8 GB: local mode runs the
+    whole engine in the driver JVM, and a heap sized past physical
+    memory gets the JVM killed by the kernel mid-run."""
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(2048, min(8192, mem_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "pymongo_change_stream_reader_spark",
     cpus: int | None = None,
@@ -43,9 +51,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        # local mode = driver-only JVM: give it real headroom (persisted
-        # sketch/signature tables + broadcast + 32 task threads)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # local mode = driver-only JVM: persisted sketch/signature
+        # tables + broadcast + task threads all live in this heap
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         # The ContextCleaner reaps checkpoint/broadcast/shuffle state
         # through WEAK references, so nothing is freed until the JVM
         # happens to GC — and a large mostly-idle heap may not GC for

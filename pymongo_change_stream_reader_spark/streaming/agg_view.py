@@ -25,7 +25,7 @@ when an extremum actually left.
 
 ## Layout under ``path``
 
-- ``keys/`` — bucketed versioned sink (plans/pipeline bucketed-sink
+- ``keys/`` — bucketed versioned sink (storage.py bucketed-sink
   protocol): one row per document key,
   ``(key, live, grp, val, __t, __i, __d)`` — the key's CURRENT
   contribution under last-writer-wins; deletes persist as
@@ -80,19 +80,22 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pymongo_change_stream_reader_spark.plans.pipeline import (
+from pymongo_change_stream_reader_spark.storage import (
     PipelineError,
-    _bucket_history_files,
-    _bucket_of,
-    _commit_bucketed,
-    _commit_bucketed_fused,
-    _read_bucket_manifest,
-    _write_atomic,
+    bucket_entries,
+    bucket_of,
     bucketed_sink_lock,
+    commit_bucketed,
+    commit_bucketed_fused,
+    pointer_current,
+    publish_pointer,
+    read_bucket_manifest,
     read_bucketed_sink,
+    read_schemaed,
+    resolve_pointer,
+    write_atomic,
 )
 from pymongo_change_stream_reader_spark.streaming.materialize import (
-    _KEY,
     _ORDER,
     _last_event_per_key,
 )
@@ -102,18 +105,6 @@ __all__ = [
     "read_agg_view",
     "read_agg_view_keys",
 ]
-
-
-def _groups_current(path: str) -> tuple[str, int] | None:
-    """(manifest-snapshot version name — or a legacy ``g-N`` whole
-    version dirname — and the applied epoch) from groups/_current,
-    None before the first commit."""
-    ptr = os.path.join(path, "groups", "_current")
-    if not os.path.exists(ptr):
-        return None
-    body = open(ptr).read().strip()
-    dirname, epoch = body.rsplit(":", 1)
-    return dirname, int(epoch)
 
 
 def _deltas_schema(value_type: str, minmax: bool = False) -> str:
@@ -132,38 +123,6 @@ def _groups_schema(value_type: str, minmax: bool = False) -> str:
     return base
 
 
-def _resolve_groups_entries(path: str) -> tuple[dict, int] | None:
-    """The COMMITTED groups state via the ``_current`` pointer:
-    ({bucket: rel_dir} — or {"__legacy__": dirname} for a pre-bucketed
-    store — and the applied epoch), None before the first commit.
-    Readers resolve ``_current``'s named manifest SNAPSHOT, never the
-    live ``_manifest`` (which may already hold a phantom commit whose
-    pointer swap never happened).  A reader racing two back-to-back
-    commits can catch the pointer between its snapshot being pruned
-    and the swap — re-read the pointer briefly (the writer swaps
-    milliseconds after the prune; snapshots are retained >= 3 deep so
-    one in-flight commit can never orphan the pointer)."""
-    import time as _time
-
-    groot = os.path.join(path, "groups")
-    for attempt in range(10):
-        cur = _groups_current(path)
-        if cur is None:
-            return None
-        vname, ep = cur
-        if vname.startswith("g-"):
-            return {"__legacy__": vname}, ep
-        mf = _read_bucket_manifest(groot, f"_manifest.h-{vname}")
-        if mf is not None:
-            return mf[1], ep
-        _time.sleep(0.05 * (attempt + 1))
-    raise PipelineError(
-        f"agg view at {path!r}: groups pointer names snapshot "
-        f"{vname!r} but no such manifest snapshot exists — the store "
-        "was vacuumed below the pointer's retention"
-    )
-
-
 def _read_groups_subset(
     spark: SparkSession,
     path: str,
@@ -177,38 +136,30 @@ def _read_groups_subset(
     legacy whole-table migration path reads its version dir directly.
     """
     schema = _groups_schema(value_type, minmax)
-    empty = spark.createDataFrame([], schema)
-    res = _resolve_groups_entries(path)
-    if res is None:
-        return empty
-    entries, _ep = res
     groot = os.path.join(path, "groups")
-    dirs = [
-        os.path.join(groot, entries[k])
-        for k in buckets
-        if k in entries
-        and os.path.isdir(os.path.join(groot, entries[k]))
-    ]
-    if not dirs:
-        return empty
+    res = resolve_pointer(groot, "agg view")
     # one read, explicit schema: no per-dir footer inference, and
     # pre-minmax files null-fill the extrema columns
-    return spark.read.schema(schema).parquet(*dirs)
+    rows = None if res is None else read_schemaed(
+        spark, groot, [res[0][k] for k in buckets if k in res[0]], schema
+    )
+    return rows if rows is not None else spark.createDataFrame([], schema)
 
 
 def read_agg_view(spark: SparkSession, path: str) -> DataFrame | None:
     """The current aggregate table ``(grp, n_docs, sum_val)`` — plus
     ``min_val``/``max_val`` for a ``track_minmax`` store; None before
     the first applied batch."""
-    res = _resolve_groups_entries(path)
+    groot = os.path.join(path, "groups")
+    cur = pointer_current(groot)
+    if cur is not None and cur[0].startswith("g-"):
+        # an r9 store not yet migrated: the pointer names a whole
+        # ``g-N`` version dir, not a manifest snapshot
+        return spark.read.parquet(os.path.join(groot, cur[0]))
+    res = resolve_pointer(groot, "agg view")
     if res is None:
         return None
     entries, _ep = res
-    groot = os.path.join(path, "groups")
-    if "__legacy__" in entries:
-        return spark.read.parquet(
-            os.path.join(groot, entries["__legacy__"])
-        )
     # explicit schema (from the pinned config): no per-dir footer
     # inference, and r14's fused keys+groups commit can leave the
     # other store's columns as nulls in the files — the schema'd
@@ -307,8 +258,8 @@ def agg_view_batch(
                     "deltas across definitions do not compose"
                 )
         else:
-            _write_atomic(cfg_path, _json.dumps(cfg))
-        cur = _groups_current(path)
+            write_atomic(cfg_path, _json.dumps(cfg))
+        cur = pointer_current(os.path.join(path, "groups"))
         if cur is not None and cur[1] >= epoch:
             # replayed epoch: fully applied (groups commit last)
             return False
@@ -346,7 +297,7 @@ def agg_view_batch(
         probe = (
             new.select(
                 F.lit(0).alias("t"),
-                _bucket_of(["key"], n_buckets).alias("b"),
+                bucket_of(["key"], n_buckets).alias("b"),
             )
             .unionByName(
                 bad.select(F.lit(1).alias("t"), F.lit(-1).alias("b"))
@@ -361,27 +312,18 @@ def agg_view_batch(
                 "contribution cannot be subtracted from a field delta"
             )
         changed = sorted(r["b"] for r in probe if r["t"] == 0)
-        mf = _read_bucket_manifest(keys_path)
-        if mf is not None and mf[0] != n_buckets:
-            raise PipelineError(
-                f"agg view at {path!r} has {mf[0]} buckets, not {n_buckets}"
-            )
-        entries = dict(mf[1]) if mf is not None else {}
-        from pymongo_change_stream_reader_spark.streaming.join_view import (
-            _read_schemaed,
-        )
-
+        entries = bucket_entries(keys_path, n_buckets, f"agg view at {path!r}")
         # the key store's layout is config-fixed (the winners frame's
         # own schema), so the read skips per-version driver-side
         # footer inference — the join/star/ER stores' r12 cut
-        old = _read_schemaed(
+        old = read_schemaed(
             spark, keys_path,
             [entries[k] for k in changed if k in entries],
             new.schema,
         )
 
         # ONE hash aggregation replaces the r13 full-outer join
-        # (join_view._merge_lww's r14 shape, specialized to also keep
+        # (materialize.merge_lww's r14 shape, specialized to also keep
         # the OLD row's contribution fields for the delta algebra):
         # union both sides tagged, max_by on (triple, side) — one
         # exchange with map-side partials instead of two + a sort.
@@ -487,7 +429,7 @@ def agg_view_batch(
                 rb = sorted(
                     r["b"]
                     for r in removals.select(
-                        _bucket_of(["grp"], n_buckets).alias("b")
+                        bucket_of(["grp"], n_buckets).alias("b")
                     ).distinct().collect()
                 )
                 gstate = _read_groups_subset(
@@ -554,7 +496,7 @@ def agg_view_batch(
         # defers it into the fused keys+groups write below (r14)
         merged_keys = merged_full.select("w.*")
         if track_minmax:
-            _commit_bucketed(
+            commit_bucketed(
                 merged_keys, keys_path, ["key"], n_buckets, entries,
                 changed=changed, retain=retain, return_df=False,
             )
@@ -571,13 +513,9 @@ def agg_view_batch(
         d = spark.read.schema(
             _deltas_schema(value_type, track_minmax)
         ).parquet(deltas_dir)
-        gmf = _read_bucket_manifest(groot)
-        if gmf is not None and gmf[0] != n_buckets:
-            raise PipelineError(
-                f"agg view groups at {path!r} has {gmf[0]} buckets, "
-                f"not {n_buckets}"
-            )
-        gentries = dict(gmf[1]) if gmf is not None else {}
+        gentries = bucket_entries(
+            groot, n_buckets, f"agg view groups at {path!r}"
+        )
         legacy = cur is not None and cur[0].startswith("g-")
         if legacy:
             # one-time in-place migration of an r9 whole-table store:
@@ -591,7 +529,7 @@ def agg_view_batch(
             gchanged = sorted(
                 r["b"]
                 for r in d.select(
-                    _bucket_of(["grp"], n_buckets).alias("b")
+                    bucket_of(["grp"], n_buckets).alias("b")
                 ).distinct().collect()
             )
             base = _read_groups_subset(
@@ -697,7 +635,7 @@ def agg_view_batch(
         # the snapshot _current names can never be pruned before the
         # swap that follows
         if track_minmax:
-            _commit_bucketed(
+            commit_bucketed(
                 nxt, groot, ["grp"], n_buckets, gentries,
                 changed=gchanged, retain=max(3, retain), return_df=False,
             )
@@ -707,7 +645,7 @@ def agg_view_batch(
             # apply order — a crash between finalizes leaves keys
             # committed and groups not, which the replay re-merges
             # idempotently from the persisted deltas
-            _commit_bucketed_fused(
+            commit_bucketed_fused(
                 [
                     dict(
                         name="keys", df=merged_keys, path=keys_path,
@@ -724,10 +662,7 @@ def agg_view_batch(
                 ],
                 path,
             )
-        vname = _bucket_history_files(groot)[-1][len("_manifest.h-"):]
-        _write_atomic(
-            os.path.join(groot, "_current"), f"{vname}:{epoch}"
-        )
+        publish_pointer(groot, epoch)
         if legacy:
             # the pointer no longer references any g- version: drop
             # the migrated whole-table dirs (numeric order is
@@ -741,7 +676,7 @@ def agg_view_batch(
         # GC: consumed delta files older than the retention window
         # (the current epoch's stay for audit/debug one window long);
         # superseded groups versions are GC'd by the bucketed sink's
-        # own retention inside _commit_bucketed
+        # own retention inside commit_bucketed
         droot = os.path.join(path, "deltas")
         depochs = sorted(
             int(dn.split("=", 1)[1])
@@ -776,13 +711,9 @@ def compact_agg_view_keys(
     document.  Purge only when the source's reordering horizon has
     provably passed (e.g. the change stream is the only writer and its
     resume token is beyond the tombstones' triples)."""
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
-        _commit_bucketed as _cb,
-    )
-
     keys_path = os.path.join(path, "keys")
     with bucketed_sink_lock(path):
-        mf = _read_bucket_manifest(keys_path)
+        mf = read_bucket_manifest(keys_path)
         if mf is None:
             return None
         n_buckets, entries = mf
@@ -793,9 +724,9 @@ def compact_agg_view_keys(
             cur = cur.filter(F.col("live"))
         compacted = cur.repartition(
             max(1, files_per_bucket * n_buckets),
-            _bucket_of(["key"], n_buckets),
+            bucket_of(["key"], n_buckets),
         )
-        return _cb(
+        return commit_bucketed(
             compacted, keys_path, ["key"], n_buckets, entries,
             sorted(entries), retain=retain,
         )

@@ -54,11 +54,9 @@ from pymongo_change_stream_reader_spark.operators.similarity import (
     _recover_ann_append_locked,
 )
 
+from pymongo_change_stream_reader_spark.storage import require_local_path
 from pymongo_change_stream_reader_spark.streaming.index_relay import (
     _last_effect_per_key,
-)
-from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
-    _require_local_path,
 )
 
 logger = logging.getLogger(__name__)
@@ -90,7 +88,7 @@ def ann_ingest_batch(
     ``kind="ivfpq"`` (the compressed composed layout, the 100 TB
     serving shape: frozen coarse quantizer + frozen codebooks).
     Returns ``{"upserted": n, "tombstoned": m}``."""
-    _require_local_path(index_path, "index_path")
+    require_local_path(index_path, "index_path")
     _require_kind(kind, "ann_ingest_batch")
     # the same LWW reduction as the BM25 relay, over the embedding
     # column (max_by orders on the event's cluster time, not the value)

@@ -11,7 +11,7 @@ of three protocols:
 
 - ``lww``: the replica's LWW merge is idempotent — a replay is a no-op;
 - ``marker``: dedup, BM25 and ANN each keep a query-id-scoped epoch
-  marker at ``<name>_epoch_log`` (streaming/kafka_sink.py), so a crash
+  marker at ``<name>_epoch_log`` (storage.commit_epoch), so a crash
   between two stores' commits replays only the missing store;
 - ``pointer``: the views and the ER registry keep their own epoch
   pointer + persisted deltas; their batch function returns False for a
@@ -36,6 +36,12 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 
+from pymongo_change_stream_reader_spark.storage import (
+    commit_epoch,
+    epoch_committed,
+    query_id,
+    require_local_path,
+)
 from pymongo_change_stream_reader_spark.streaming import (
     agg_view,
     ann_relay,
@@ -44,12 +50,6 @@ from pymongo_change_stream_reader_spark.streaming import (
     index_relay,
     join_view,
     star_view,
-)
-from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
-    _commit_epoch,
-    _epoch_committed,
-    _query_id,
-    _require_local_path,
 )
 from pymongo_change_stream_reader_spark.streaming.materialize import (
     materialize_change_batch,
@@ -275,14 +275,14 @@ def composed_apply_batch(
             "reduce",
             lambda: reduce_batch_shared(pinned).localCheckpoint(eager=True),
         )
-    qid = _query_id(checkpoint_dir)
+    qid = query_id(checkpoint_dir)
     ctx = dict(kw, scope=qid, store_stats=store_stats)
 
     def _section(s: Store) -> Callable[[], str]:
         marker = os.path.join(checkpoint_dir, f"{s.name}_epoch_log")
 
         def run() -> str:
-            if s.replay == "marker" and _epoch_committed(
+            if s.replay == "marker" and epoch_committed(
                 marker, epoch_id, qid
             ):
                 return "replayed-skip"
@@ -291,7 +291,7 @@ def composed_apply_batch(
                 epoch_id, ctx,
             )
             if s.replay == "marker":
-                _commit_epoch(marker, epoch_id, qid)
+                commit_epoch(marker, epoch_id, qid)
             if s.replay == "pointer" and not done:
                 return "replayed-skip"
             return "applied"
@@ -332,7 +332,7 @@ def _check(kw: dict, checkpoint_dir: str) -> None:
         raise ValueError(
             f"composed relay: enable at least one store ({names})"
         )
-    _require_local_path(checkpoint_dir, "checkpoint_dir")
+    require_local_path(checkpoint_dir, "checkpoint_dir")
     for s in enabled:
         for p in s.paths:
             if kw[p] is None:
@@ -340,7 +340,7 @@ def _check(kw: dict, checkpoint_dir: str) -> None:
                     f"composed relay: {s.name} needs BOTH "
                     + " and ".join(s.paths)
                 )
-            _require_local_path(kw[p], p)
+            require_local_path(kw[p], p)
         for k in s.required:
             if not kw[k]:
                 raise ValueError(f"composed relay: {s.paths[0]} needs {k}")

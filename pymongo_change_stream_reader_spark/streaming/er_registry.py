@@ -48,7 +48,7 @@ touched buckets).
 - ``view/`` + ``view/_current`` — the ASSIGNMENT table (rid,
   entity), live rows only, bucketed BY rid; ``_current`` names the
   committed snapshot + applied epoch — the single atomic visibility
-  point (shared resolver, streaming/view_pointer.py).
+  point (shared resolver, storage.resolve_pointer).
 
 ## Semantics
 
@@ -99,28 +99,26 @@ from pymongo_change_stream_reader_spark.operators.linkage import (
     sim_numeric_closeness,
     sim_token_jaccard,
 )
-from pymongo_change_stream_reader_spark.plans.pipeline import (
+from pymongo_change_stream_reader_spark.storage import (
     PipelineError,
-    _bucket_of,
-    _commit_bucketed,
-    _commit_bucketed_fused,
-    _read_bucket_manifest,
-    _read_entry_dirs,
-    _write_atomic,
+    bucket_of,
     bucketed_sink_lock,
-)
-from pymongo_change_stream_reader_spark.streaming.join_view import (
-    _bucket_history_name,
-    _flatten_bucket_dirs,
-    _merge_lww,
+    commit_bucketed,
+    commit_bucketed_fused,
+    flatten_bucket_dirs,
+    pointer_current,
+    publish_pointer,
+    read_bucket_manifest,
+    read_delta_dir,
+    read_entry_dirs,
+    read_schemaed,
+    resolve_pointer,
+    write_atomic,
 )
 from pymongo_change_stream_reader_spark.streaming.materialize import (
     _ORDER,
     _last_event_per_key,
-)
-from pymongo_change_stream_reader_spark.streaming.view_pointer import (
-    resolve_view_entries,
-    view_pointer_current,
+    merge_lww,
 )
 
 __all__ = [
@@ -383,30 +381,23 @@ def _read_store_buckets(
     per-version driver-side footer/schema inference — measured at
     ~0.1 s per spark.read.parquet call, a real slice of the per-batch
     floor across this store's five reads."""
-    mf = _read_bucket_manifest(store)
+    mf = read_bucket_manifest(store)
     if mf is None:
         return None
     rels = [mf[1][k] for k in buckets if k in mf[1]]
     if schema is None:
-        return _read_entry_dirs(spark, store, rels)
-    dirs = [
-        os.path.join(store, rel)
-        for rel in rels
-        if os.path.isdir(os.path.join(store, rel))
-    ]
-    if not dirs:
-        return None
-    return spark.read.schema(schema).parquet(*dirs)
+        return read_entry_dirs(spark, store, rels)
+    return read_schemaed(spark, store, rels, schema)
 
 
 def read_er_assign(spark: SparkSession, path: str) -> DataFrame | None:
     """The current assignment table (rid, entity); None before the
     first applied batch."""
-    res = resolve_view_entries(path, "er registry")
+    vroot = os.path.join(path, "view")
+    res = resolve_pointer(vroot, "er registry")
     if res is None:
         return None
     entries, _ep = res
-    vroot = os.path.join(path, "view")
     dirs = [
         os.path.join(vroot, rel)
         for rel in entries.values()
@@ -466,10 +457,10 @@ def read_er_records(spark: SparkSession, path: str) -> DataFrame | None:
     ``__skey`` original-id column under ``id_mode="hashed"``) — the
     rebuild/reseed surface; None before the first applied batch."""
     store = os.path.join(path, "records")
-    mf = _read_bucket_manifest(store)
+    mf = read_bucket_manifest(store)
     if mf is None:
         return None
-    rows = _read_entry_dirs(spark, store, list(mf[1].values()))
+    rows = read_entry_dirs(spark, store, list(mf[1].values()))
     if rows is None:
         return None
     cols = _records_cols(path)
@@ -521,7 +512,7 @@ def er_registry_batch(
                 # matches this spec's legacy projection — upgrade the
                 # persisted config in place instead of refusing (the
                 # agg/join views' setdefault contract; r13 ADVICE)
-                _write_atomic(cfg_path, json.dumps(cfg))
+                write_atomic(cfg_path, json.dumps(cfg))
             elif stored != cfg:
                 raise PipelineError(
                     f"er registry at {path!r} was created with a "
@@ -530,7 +521,7 @@ def er_registry_batch(
                 )
         else:
             os.makedirs(path, exist_ok=True)
-            _write_atomic(cfg_path, json.dumps(cfg))
+            write_atomic(cfg_path, json.dumps(cfg))
         if os.path.exists(os.path.join(path, _REBUILD_MARKER)):
             # a rebuild crashed between its store commits and the
             # pointer swap: some stores may serve the rebuilt
@@ -540,7 +531,7 @@ def er_registry_batch(
             # recomputes from the records store, whose live rows are
             # identical before and after a rebuild commit).
             _rebuild_locked(spark, path, spec, retain)
-        cur = view_pointer_current(path)
+        cur = pointer_current(os.path.join(path, "view"))
         if cur is not None and cur[1] >= epoch:
             return False
         os.makedirs(os.path.join(path, "deltas"), exist_ok=True)
@@ -561,21 +552,17 @@ def er_registry_batch(
         # replay-stable: ALWAYS consume the persisted delta frames
         # (key tombstones / member relabels derive from PRE-commit
         # store state and cannot be re-derived once committed).  All
-        # four reads are schema'd via _read_delta_dir: r14's fused
+        # four reads are schema'd via read_delta_dir: r14's fused
         # delta write can leave empty dirs and union-surplus null
         # columns, both invisible under an explicit schema.  The
         # records schema rides _meta.json (caller-typed fields);
         # pre-r14 epochs without it keep the footer-inferred read.
-        from pymongo_change_stream_reader_spark.streaming.join_view import (
-            _read_delta_dir,
-        )
-
         meta = json.load(open(os.path.join(deltas_dir, "_meta.json")))
         rec_schema_json = meta.get("rec_schema")
         if rec_schema_json:
             from pyspark.sql.types import StructType
 
-            d_rec = _read_delta_dir(
+            d_rec = read_delta_dir(
                 spark,
                 os.path.join(deltas_dir, "records"),
                 StructType.fromJson(json.loads(rec_schema_json)),
@@ -584,31 +571,31 @@ def er_registry_batch(
             d_rec = spark.read.parquet(
                 os.path.join(deltas_dir, "records")
             )
-        d_key = _read_delta_dir(
+        d_key = read_delta_dir(
             spark, os.path.join(deltas_dir, "keys"), _KEYS_SCHEMA
         )
-        d_asn = _read_delta_dir(
+        d_asn = read_delta_dir(
             spark, os.path.join(deltas_dir, "assign"), _ASN_SCHEMA
         )
-        d_mem = _read_delta_dir(
+        d_mem = read_delta_dir(
             spark, os.path.join(deltas_dir, "members"), _MEM_SCHEMA
         )
 
-        rec_merged, _ro, rec_entries, rec_changed = _merge_lww(
+        rec_merged, _ro, rec_entries, rec_changed = merge_lww(
             spark, d_rec, rec_path, ["rid"], ["rid"], n_buckets,
             changed=meta["rec_buckets"], schema=d_rec.schema,
         )
-        key_merged, _ko, key_entries, key_changed = _merge_lww(
+        key_merged, _ko, key_entries, key_changed = merge_lww(
             spark, d_key, keys_path, ["bk", "rid"], ["bk"], n_buckets,
             changed=meta["key_buckets"], schema=_KEYS_SCHEMA,
         )
-        mem_merged, _mo, mem_entries, mem_changed = _merge_lww(
+        mem_merged, _mo, mem_entries, mem_changed = merge_lww(
             spark, d_mem, mem_path, ["entity", "rid"], ["entity"],
             n_buckets, changed=meta["mem_buckets"], schema=_MEM_SCHEMA,
         )
 
         vchanged = meta["asn_buckets"]
-        res = resolve_view_entries(path, "er registry")
+        res = resolve_pointer(vroot, "er registry")
         ventries = dict(res[0]) if res is not None else {}
         rels = [ventries[k] for k in vchanged if k in ventries]
         dirs = [
@@ -631,11 +618,11 @@ def er_registry_batch(
             )
         )
         # ONE fused write commits all four stores (r14 — the r13
-        # wave pooled four separate _commit_bucketed writes); the
+        # wave pooled four separate commit_bucketed writes); the
         # per-store manifest finalize stays sequential filesystem
         # work, and a crash between finalizes (a store prefix
         # committed) is exactly the window the persisted deltas cover
-        _commit_bucketed_fused(
+        commit_bucketed_fused(
             [
                 dict(
                     name="records", df=rec_merged, path=rec_path,
@@ -665,8 +652,7 @@ def er_registry_batch(
         )
 
         # single visibility point, strictly after every commit
-        vname = _bucket_history_name(vroot)
-        _write_atomic(os.path.join(vroot, "_current"), f"{vname}:{epoch}")
+        publish_pointer(vroot, epoch)
 
         droot = os.path.join(path, "deltas")
         depochs = sorted(
@@ -744,10 +730,10 @@ def _compute_and_persist_deltas(
     # skipped-id count (t=4, rows whose id was NULL/unparseable),
     # which also materializes the W0 and newk checkpoints
     j1 = W.select(
-        F.lit(0).alias("t"), _bucket_of(["rid"], n_buckets).alias("b")
+        F.lit(0).alias("t"), bucket_of(["rid"], n_buckets).alias("b")
     ).unionByName(
         newk.select(
-            F.lit(2).alias("t"), _bucket_of(["bk"], n_buckets).alias("b")
+            F.lit(2).alias("t"), bucket_of(["bk"], n_buckets).alias("b")
         )
     ).unionByName(
         W0.groupBy().agg(
@@ -879,11 +865,11 @@ def _compute_and_persist_deltas(
         .localCheckpoint(eager=False)
     )
     j2 = prior_rids.select(
-        F.lit(0).alias("t"), _bucket_of(["rid"], n_buckets).alias("b")
+        F.lit(0).alias("t"), bucket_of(["rid"], n_buckets).alias("b")
     ).unionByName(
         d_key.select(
             F.lit(1).alias("t"),
-            _bucket_of(["bk"], n_buckets).alias("b"),
+            bucket_of(["bk"], n_buckets).alias("b"),
         )
     )
     if hashed:
@@ -943,7 +929,7 @@ def _compute_and_persist_deltas(
     # assignments of the touched rids: the batch's + the candidates'
     # buckets were both collected above — one probe read covers them
     pa_base = None
-    res = resolve_view_entries(path, "er registry")
+    res = resolve_pointer(os.path.join(path, "view"), "er registry")
     if res is not None:
         entries = res[0]
         want = sorted(set(rid_buckets) | set(prid_buckets))
@@ -1021,7 +1007,7 @@ def _compute_and_persist_deltas(
     ch_buckets = sorted(
         r["b"]
         for r in changed.select(
-            _bucket_of(["old_e"], n_buckets).alias("b")
+            bucket_of(["old_e"], n_buckets).alias("b")
         )
         .distinct()
         .collect()
@@ -1147,8 +1133,8 @@ def _compute_and_persist_deltas(
     # lists (the records/keys lists were already collected in j1/j2,
     # where they gate the pre-write store reads)
     bucket_col = {
-        "assign": _bucket_of(["rid"], n_buckets),
-        "members": _bucket_of(["entity"], n_buckets),
+        "assign": bucket_of(["rid"], n_buckets),
+        "members": bucket_of(["entity"], n_buckets),
     }
     writes = (
         ("records", W),
@@ -1185,7 +1171,7 @@ def _compute_and_persist_deltas(
             dst = os.path.join(tmp, sub)
             if os.path.isdir(src):
                 os.rename(src, dst)
-                derived[sub] = _flatten_bucket_dirs(dst)
+                derived[sub] = flatten_bucket_dirs(dst)
             else:
                 os.makedirs(dst, exist_ok=True)
                 derived[sub] = []
@@ -1198,7 +1184,7 @@ def _compute_and_persist_deltas(
             w = df.coalesce(1).write.mode("overwrite")
             if sub in bucket_col:
                 w.partitionBy("__b").parquet(dst)
-                derived[sub] = _flatten_bucket_dirs(dst)
+                derived[sub] = flatten_bucket_dirs(dst)
             else:
                 w.parquet(dst)
 
@@ -1212,7 +1198,7 @@ def _compute_and_persist_deltas(
                 f.result()
     asn_buckets = derived.get("assign", [])
     mem_buckets = derived.get("members", [])
-    _write_atomic(
+    write_atomic(
         os.path.join(tmp, "_meta.json"),
         json.dumps(
             {
@@ -1391,16 +1377,16 @@ def _rebuild_locked(
         open(os.path.join(path, "_config.json"))
     )["n_buckets"]
     marker = os.path.join(path, _REBUILD_MARKER)
-    cur = view_pointer_current(path)
+    cur = pointer_current(os.path.join(path, "view"))
     if cur is None:
         if os.path.exists(marker):
             os.unlink(marker)
         return {"records": 0, "entities": 0}
     ep = cur[1]
     rec_path = os.path.join(path, "records")
-    mf = _read_bucket_manifest(rec_path)
+    mf = read_bucket_manifest(rec_path)
     rows = (
-        _read_entry_dirs(spark, rec_path, list(mf[1].values()))
+        read_entry_dirs(spark, rec_path, list(mf[1].values()))
         if mf is not None
         else None
     )
@@ -1441,26 +1427,26 @@ def _rebuild_locked(
     # four-store commit wave leaves it in place, and the next batch
     # apply re-runs the rebuild before folding anything onto the
     # (possibly mixed) state
-    _write_atomic(marker, json.dumps({"epoch": ep}))
+    write_atomic(marker, json.dumps({"epoch": ep}))
     allb = list(range(n_buckets))
     commits = (
         # records: tombstones purged, live rows keep their
         # ORIGINAL triples (<= ep, so future deltas win LWW)
-        lambda: _commit_bucketed(
+        lambda: commit_bucketed(
             live_rows, rec_path, ["rid"], n_buckets, {},
             changed=allb, retain=retain, return_df=False,
         ),
-        lambda: _commit_bucketed(
+        lambda: commit_bucketed(
             new_keys, os.path.join(path, "keys"), ["bk"],
             n_buckets, {}, changed=allb, retain=retain,
             return_df=False,
         ),
-        lambda: _commit_bucketed(
+        lambda: commit_bucketed(
             new_mem, os.path.join(path, "members"), ["entity"],
             n_buckets, {}, changed=allb, retain=retain,
             return_df=False,
         ),
-        lambda: _commit_bucketed(
+        lambda: commit_bucketed(
             asn, vroot, ["rid"], n_buckets, {}, changed=allb,
             retain=max(3, retain), return_df=False,
         ),
@@ -1470,8 +1456,7 @@ def _rebuild_locked(
     ) as pool:
         for fut in [pool.submit(fn) for fn in commits]:
             fut.result()
-    vname = _bucket_history_name(vroot)
-    _write_atomic(os.path.join(vroot, "_current"), f"{vname}:{ep}")
+    publish_pointer(vroot, ep)
     os.unlink(marker)  # the rebuild is fully visible
     live_rows.unpersist()
     asn.unpersist()
@@ -1496,35 +1481,34 @@ def compact_er_registry(
             ("members", ["entity"]),
         ):
             sp = os.path.join(path, store)
-            mf = _read_bucket_manifest(sp)
+            mf = read_bucket_manifest(sp)
             if mf is None:
                 out[store] = 0
                 continue
-            rows = _read_entry_dirs(spark, sp, list(mf[1].values()))
+            rows = read_entry_dirs(spark, sp, list(mf[1].values()))
             if rows is None:
                 out[store] = 0
                 continue
             rows = rows.persist()
             dead = rows.filter(~F.col("live")).count()
-            _commit_bucketed(
+            commit_bucketed(
                 rows.filter(F.col("live")), sp, on, n_buckets, {},
                 changed=list(range(n_buckets)), retain=retain,
                 return_df=False,
             )
             rows.unpersist()
             out[store] = dead
-        res = resolve_view_entries(path, "er registry")
+        vroot = os.path.join(path, "view")
+        res = resolve_pointer(vroot, "er registry")
         if res is not None:
             entries, ep = res
-            vroot = os.path.join(path, "view")
-            rows = _read_entry_dirs(spark, vroot, list(entries.values()))
+            rows = read_entry_dirs(spark, vroot, list(entries.values()))
             if rows is None:
                 rows = spark.createDataFrame([], "rid LONG, entity LONG")
-            _commit_bucketed(
+            commit_bucketed(
                 rows.select("rid", "entity"), vroot, ["rid"], n_buckets,
                 {}, changed=list(range(n_buckets)),
                 retain=max(3, retain), return_df=False,
             )
-            vname = _bucket_history_name(vroot)
-            _write_atomic(os.path.join(vroot, "_current"), f"{vname}:{ep}")
+            publish_pointer(vroot, ep)
     return out

@@ -43,12 +43,10 @@ from pymongo_change_stream_reader_spark.operators.maintenance import (
 )
 from pymongo_change_stream_reader_spark.operators.retrieval import (
     _bm25_apply_locked,
-    recover_bm25_append,
+    _recover_bm25_append_locked,
     write_bm25_index,
 )
-from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
-    _require_local_path,
-)
+from pymongo_change_stream_reader_spark.storage import require_local_path
 
 logger = logging.getLogger(__name__)
 
@@ -97,7 +95,7 @@ def bm25_ingest_batch(
 ) -> dict:
     """Fold one batch of change events into the stored BM25 index.
     Returns ``{"upserted": n, "tombstoned": m}``."""
-    _require_local_path(index_path, "index_path")
+    require_local_path(index_path, "index_path")
     effects = _last_effect_per_key(batch, text_col, key_col).localCheckpoint(
         eager=False  # split two ways + aggregated below; first
         # consumer materializes
@@ -119,7 +117,7 @@ def bm25_ingest_batch(
         # a crashed previous apply rolls back here, INSIDE the lock:
         # its epoch never committed, so this batch IS the replay and
         # must see the exact pre-crash index state
-        if recover_bm25_append(index_path):
+        if _recover_bm25_append_locked(index_path):
             logger.warning(
                 "bm25 index at %s: rolled back a crashed apply before "
                 "re-applying the replayed batch",

@@ -82,23 +82,27 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pymongo_change_stream_reader_spark.plans.pipeline import (
+from pymongo_change_stream_reader_spark.storage import (
     PipelineError,
-    _bucket_of,
-    _commit_bucketed,
-    _commit_bucketed_fused,
-    _read_bucket_manifest,
-    _read_entry_dirs,
-    _write_atomic,
+    bucket_entries,
+    bucket_of,
     bucketed_sink_lock,
+    commit_bucketed,
+    commit_bucketed_fused,
+    flatten_bucket_dirs,
+    pointer_current,
+    publish_pointer,
+    read_bucket_manifest,
+    read_bucketed_sink,
+    read_delta_dir,
+    read_schemaed,
+    resolve_pointer,
+    write_atomic,
 )
 from pymongo_change_stream_reader_spark.streaming.materialize import (
     _ORDER,
     _last_event_per_key,
-)
-from pymongo_change_stream_reader_spark.streaming.view_pointer import (
-    resolve_view_entries,
-    view_pointer_current,
+    merge_lww,
 )
 
 __all__ = [
@@ -110,26 +114,14 @@ __all__ = [
 _VIEW_COLS = ("key", "fk", "fact_doc", "dim_doc")
 
 
-def _view_current(path: str) -> tuple[str, int] | None:
-    return view_pointer_current(path)
-
-
-def _resolve_view_entries(path: str) -> tuple[dict, int] | None:
-    """Committed view state via the shared ``_current`` pointer
-    resolver (streaming/view_pointer.py — hoisted join/star common
-    logic); pointer race handling identical to the aggregate view's
-    groups resolver."""
-    return resolve_view_entries(path, "join view")
-
-
 def read_join_view(spark: SparkSession, path: str) -> DataFrame | None:
     """The current joined table (key, fk, fact_doc, dim_doc); None
     before the first applied batch."""
-    res = _resolve_view_entries(path)
+    vroot = os.path.join(path, "view")
+    res = resolve_pointer(vroot, "join view")
     if res is None:
         return None
     entries, _ep = res
-    vroot = os.path.join(path, "view")
     dirs = [
         os.path.join(vroot, rel)
         for rel in entries.values()
@@ -140,152 +132,6 @@ def read_join_view(spark: SparkSession, path: str) -> DataFrame | None:
             [], "key STRING, fk STRING, fact_doc STRING, dim_doc STRING"
         )
     return spark.read.parquet(*dirs).select(*_VIEW_COLS)
-
-
-def _read_schemaed(
-    spark: SparkSession, store: str, rels: list, schema
-) -> DataFrame | None:
-    """Union the given bucket dirs with an EXPLICIT schema — the
-    stores' layouts are config-fixed, so this skips the per-version
-    driver-side footer/schema inference _read_entry_dirs pays (a
-    missing column null-fills, extras are ignored: the same
-    reconciliation, without the driver latency).  Shared by the
-    join/star views and the ER registry."""
-    dirs = [
-        os.path.join(store, rel)
-        for rel in rels
-        if os.path.isdir(os.path.join(store, rel))
-    ]
-    if not dirs:
-        return None
-    return spark.read.schema(schema).parquet(*dirs)
-
-
-def _read_delta_dir(spark: SparkSession, d: str, schema) -> DataFrame:
-    """Read a persisted delta dir with an EXPLICIT schema; a missing
-    or file-less dir (r14's fused delta write creates no partition
-    dir for an empty frame) reads as an empty frame of the schema.
-    Shared by the join/star views and the ER registry."""
-    if not os.path.isdir(d) or not any(
-        f.endswith(".parquet") for f in os.listdir(d)
-    ):
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(d)
-
-
-def _flatten_bucket_dirs(sub_dir: str) -> list[int]:
-    """Move a delta subdir's ``__b=<n>`` write-partition dirs' files
-    up into the subdir itself and return the sorted bucket ids — the
-    store's touched-bucket list, derived from the write instead of a
-    dedicated collect job (r14).  One writer task emits the SAME
-    part-file name into every partition dir, so flattened files gain
-    a ``b<val>-`` prefix (and their ``.crc`` twins the matching
-    ``.b<val>-…`` name, keeping the local filesystem's checksum
-    pairing).  Rows without a bucket column land under the Hive
-    default-partition dir; their files flatten the same way, they
-    just contribute no bucket id.  Shared by the join/star views and
-    the ER registry."""
-    buckets: list[int] = []
-    for dn in os.listdir(sub_dir):
-        p = os.path.join(sub_dir, dn)
-        if not (os.path.isdir(p) and dn.startswith("__b=")):
-            continue
-        val = dn.split("=", 1)[1]
-        if val.lstrip("-").isdigit():
-            buckets.append(int(val))
-        for fn in os.listdir(p):
-            if fn.startswith(".") and fn.endswith(".crc"):
-                dst_fn = f".b{val}-{fn[1:]}"
-            else:
-                dst_fn = f"b{val}-{fn}"
-            os.rename(
-                os.path.join(p, fn), os.path.join(sub_dir, dst_fn)
-            )
-        os.rmdir(p)
-    return sorted(buckets)
-
-
-def _merge_lww(
-    spark: SparkSession,
-    winners: DataFrame,
-    store: str,
-    merge_on: list[str],
-    bucket_on: list[str],
-    n_buckets: int,
-    changed: list[int] | None = None,
-    schema=None,
-    batch_flag: str | None = None,
-) -> tuple[DataFrame, DataFrame, dict, list[int]]:
-    """LWW merge of ``winners`` against the committed rows of their
-    touched buckets in ``store`` (bucketed by ``bucket_on``, row
-    identity ``merge_on`` — the secondary index buckets by fk but
-    merges per (fk, key)): returns (merged rows to commit, the old
-    rows frame, manifest entries, changed buckets).  Winner wins on
-    triple >= (replay-safe).  ``changed`` passes a precomputed
-    touched-bucket list (the batch computes every store's buckets in
-    ONE combined job — see join_view_batch); None collects it here.
-
-    r14 shape: ONE hash aggregation (union both sides tagged, max_by
-    on (triple, side)) replaces the r13 full-outer join — the join
-    form paid two exchanges plus a sort per merge; this pays one
-    exchange with map-side partial aggregation (guide §2.3/§2.4).  A
-    triple TIE resolves to the new side (__new orders last), exactly
-    the join form's ``trip(new) >= trip(old)``; NULL merge keys group
-    together, matching the join form's eqNullSafe equality.  Both
-    sides hold at most one row per merge key (store invariant /
-    pre-reduced batch), so max_by picks the lone row when only one
-    side has it.
-
-    ``batch_flag``: when set, the merged frame carries an extra
-    BOOLEAN column of that name — True iff the merge key appeared in
-    ``winners``.  Callers derive their post-LWW batch subset with a
-    filter on the already-checkpointed merged frame instead of a
-    separate semi-join job (drop the column before commit)."""
-    if changed is None:
-        changed = sorted(
-            r["b"]
-            for r in winners.select(
-                _bucket_of(bucket_on, n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-    mf = _read_bucket_manifest(store)
-    if mf is not None and mf[0] != n_buckets:
-        raise PipelineError(
-            f"store {store!r} has {mf[0]} buckets, not {n_buckets}"
-        )
-    entries = dict(mf[1]) if mf is not None else {}
-    rels = [entries[k] for k in changed if k in entries]
-    if schema is not None:
-        # schema-fixed stores skip the per-version driver-side
-        # footer inference
-        old = _read_schemaed(spark, store, rels, schema)
-    else:
-        old = _read_entry_dirs(spark, store, rels)
-    if old is None:
-        old = spark.createDataFrame([], winners.schema)
-    cols = winners.columns
-    u = (
-        old.select(*cols)
-        .withColumn("__new", F.lit(0))
-        .unionByName(winners.select(*cols).withColumn("__new", F.lit(1)))
-    )
-    payload = F.struct(*[F.col(c) for c in cols])
-    ordk = F.struct(*[F.col(c) for c in _ORDER], F.col("__new"))
-    aggs = [F.max_by(payload, ordk).alias("__w")]
-    if batch_flag is not None:
-        aggs.append(
-            F.max("__new").cast("boolean").alias(batch_flag)
-        )
-    merged = (
-        u.groupBy(*merge_on)
-        .agg(*aggs)
-        .select(
-            "__w.*", *([batch_flag] if batch_flag is not None else [])
-        )
-    )
-    return merged, old, entries, changed
 
 
 def join_view_batch(
@@ -362,8 +208,8 @@ def join_view_batch(
                     "do not compose"
                 )
         else:
-            _write_atomic(cfg_path, json.dumps(cfg))
-        cur = _view_current(path)
+            write_atomic(cfg_path, json.dumps(cfg))
+        cur = pointer_current(os.path.join(path, "view"))
         if cur is not None and cur[1] >= epoch:
             return False
 
@@ -455,12 +301,12 @@ def join_view_batch(
         wb = (
             fact_winners.select(
                 F.lit(0).alias("t"),
-                _bucket_of(["key"], n_buckets).alias("b"),
+                bucket_of(["key"], n_buckets).alias("b"),
             )
             .unionByName(
                 dim_winners.select(
                     F.lit(1).alias("t"),
-                    _bucket_of(["jk"], n_buckets).alias("b"),
+                    bucket_of(["jk"], n_buckets).alias("b"),
                 )
             )
             .unionByName(violations)
@@ -482,13 +328,13 @@ def join_view_batch(
 
         # winners-derived schemas skip the per-version driver-side
         # footer inference on every store read (config-fixed layouts;
-        # missing columns null-fill — _read_entry_dirs semantics).
+        # missing columns null-fill — read_entry_dirs semantics).
         # The merges carry an __in_batch flag: the post-LWW batch
         # subsets (batch keys only — replays where the store already
         # has the batch keep winner == stored row) are FILTERS over
         # the one checkpointed merged frame instead of two dedicated
         # semi-join jobs (r14)
-        fact_merged_f, fact_old, f_entries, _ = _merge_lww(
+        fact_merged_f, fact_old, f_entries, _ = merge_lww(
             spark, fact_winners, facts_path, ["key"], ["key"], n_buckets,
             changed=f_changed, schema=fact_winners.schema,
             batch_flag="__in_batch",
@@ -498,7 +344,7 @@ def join_view_batch(
         batch_fact_post = fact_merged_f.filter(
             F.col("__in_batch")
         ).drop("__in_batch")
-        dim_merged_f, _dim_old, d_entries, _ = _merge_lww(
+        dim_merged_f, _dim_old, d_entries, _ = merge_lww(
             spark, dim_winners, dims_path, ["key"], ["jk"], n_buckets,
             changed=d_changed, schema=dim_winners.schema,
             batch_flag="__in_batch",
@@ -563,7 +409,7 @@ def join_view_batch(
             )
             .select(
                 F.lit(0).alias("t"),
-                _bucket_of(["fk"], n_buckets).alias("b"),
+                bucket_of(["fk"], n_buckets).alias("b"),
             )
             .unionByName(
                 batch_dim_post.select(
@@ -578,13 +424,13 @@ def join_view_batch(
         deltas_dir = os.path.join(path, "view_deltas", f"epoch={epoch}")
         if not os.path.isdir(deltas_dir):
             # ---- fact-driven ΔV: batch fact keys join POST-batch dims
-            dmf = _read_bucket_manifest(dims_path)
+            dmf = read_bucket_manifest(dims_path)
             if dmf is None:
                 dim_base = dim_merged.filter(F.lit(False))
             else:
                 # dims bucket by JOIN KEY, so the facts' fk values
                 # address the buckets directly (fkb: probe job above)
-                rows = _read_schemaed(
+                rows = read_schemaed(
                     spark, dims_path,
                     [dmf[1][k] for k in fkb if k in dmf[1]],
                     dim_winners.schema,
@@ -622,11 +468,11 @@ def join_view_batch(
             # batch's dim keys, batch fact keys excluded.  The dim
             # keys' buckets are d_changed (the dims store buckets by
             # the SAME jk values — no second collect).
-            imf = _read_bucket_manifest(idx_path)
+            imf = read_bucket_manifest(idx_path)
             if imf is None:
                 affected = idx_winners.filter(F.lit(False))
             else:
-                rows = _read_schemaed(
+                rows = read_schemaed(
                     spark, idx_path,
                     [imf[1][k] for k in d_changed if k in imf[1]],
                     idx_winners.schema,
@@ -696,10 +542,10 @@ def join_view_batch(
             # are read off the written dirs (zero driver jobs)
             # instead of riding a probe leg + a post-write collect.
             du = d.withColumn(
-                "__b", _bucket_of(["key"], n_buckets)
+                "__b", bucket_of(["key"], n_buckets)
             ).withColumn("__delta", F.lit("view")).unionByName(
                 idx_winners.withColumn(
-                    "__b", _bucket_of(["fk"], n_buckets)
+                    "__b", bucket_of(["fk"], n_buckets)
                 ).withColumn("__delta", F.lit("idx")),
                 allowMissingColumns=True,
             )
@@ -712,7 +558,7 @@ def join_view_batch(
                 dst = os.path.join(tmp, sub)
                 if os.path.isdir(src):
                     os.rename(src, dst)
-                    derived[sub] = _flatten_bucket_dirs(dst)
+                    derived[sub] = flatten_bucket_dirs(dst)
                 else:
                     # empty frame -> no partition dir; keep the
                     # layout so replays read an empty delta (and the
@@ -722,7 +568,7 @@ def join_view_batch(
             # the index AND view stores' touched buckets, persisted
             # with the deltas so neither the replay path nor the
             # first apply needs a discovery job
-            _write_atomic(
+            write_atomic(
                 os.path.join(tmp, "_meta.json"),
                 json.dumps(
                     {
@@ -747,7 +593,7 @@ def join_view_batch(
             # schema'd read: r14's fused delta write can leave an
             # EMPTY idx dir (and union-surplus null columns in the
             # files); the explicit schema reads both layouts alike
-            idx_winners = _read_delta_dir(
+            idx_winners = read_delta_dir(
                 spark, idx_delta_dir, idx_winners.schema
             ).select("fk", "key", "live", "doc", *_ORDER)
             meta_path = os.path.join(deltas_dir, "_meta.json")
@@ -788,7 +634,7 @@ def join_view_batch(
         # POINTER swap — the single visibility point — still happens
         # strictly after every commit returns (a crash leaves at worst
         # an orphaned unreferenced view version, GC'd by retention).
-        idx_merged, _io, i_entries, i_changed = _merge_lww(
+        idx_merged, _io, i_entries, i_changed = merge_lww(
             spark, idx_winners, idx_path, ["fk", "key"], ["fk"], n_buckets,
             changed=i_changed, schema=idx_winners.schema,
         )
@@ -800,13 +646,7 @@ def join_view_batch(
             "fact_doc STRING, dim_doc STRING"
         ).parquet(view_delta_dir)
         vroot = os.path.join(path, "view")
-        vmf = _read_bucket_manifest(vroot)
-        if vmf is not None and vmf[0] != n_buckets:
-            raise PipelineError(
-                f"join view at {path!r} has {vmf[0]} buckets, "
-                f"not {n_buckets}"
-            )
-        ventries = dict(vmf[1]) if vmf is not None else {}
+        ventries = bucket_entries(vroot, n_buckets, f"join view at {path!r}")
 
         if vchanged is None:
             # pre-r14b delta epoch without a persisted view-bucket
@@ -814,14 +654,14 @@ def join_view_batch(
             vchanged = sorted(
                 r["b"]
                 for r in d.select(
-                    _bucket_of(["key"], n_buckets).alias("b")
+                    bucket_of(["key"], n_buckets).alias("b")
                 )
                 .distinct()
                 .collect()
             )
-        res = _resolve_view_entries(path)
+        res = resolve_pointer(vroot, "join view")
         committed = dict(res[0]) if res is not None else {}
-        base_rows = _read_schemaed(
+        base_rows = read_schemaed(
             spark, vroot,
             [committed[k] for k in vchanged if k in committed],
             ", ".join(f"{c} STRING" for c in _VIEW_COLS),
@@ -838,12 +678,12 @@ def join_view_batch(
             .unionByName(d.filter(F.col("live")).select(*_VIEW_COLS))
         )
         # ONE fused write commits all four stores (r14 — the r13 wave
-        # pooled four separate _commit_bucketed writes, each its own
+        # pooled four separate commit_bucketed writes, each its own
         # Spark action + commit protocol); the per-store manifest
         # finalize stays sequential filesystem work, and the crash
         # surface (a prefix of stores committed) is exactly what the
         # persisted deltas already cover.
-        _commit_bucketed_fused(
+        commit_bucketed_fused(
             [
                 dict(
                     name="facts", df=fact_merged, path=facts_path,
@@ -871,10 +711,7 @@ def join_view_batch(
 
         # the POINTER swap is the batch's single visibility point and
         # runs only after every store and the view version are durable
-        vname = _bucket_history_name(vroot)
-        _write_atomic(
-            os.path.join(vroot, "_current"), f"{vname}:{epoch}"
-        )
+        publish_pointer(vroot, epoch)
 
         # GC consumed delta dirs beyond the retention window
         droot = os.path.join(path, "view_deltas")
@@ -888,16 +725,6 @@ def join_view_batch(
                 os.path.join(droot, f"epoch={e}"), ignore_errors=True
             )
         return True
-
-
-def _bucket_history_name(root: str) -> str:
-    """The newest manifest-history snapshot name under ``root`` —
-    the value the epoch pointer records."""
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
-        _bucket_history_files,
-    )
-
-    return _bucket_history_files(root)[-1][len("_manifest.h-"):]
 
 
 def compact_join_view(
@@ -923,10 +750,6 @@ def compact_join_view(
     source's reordering horizon has provably passed.  The ``view/``
     table itself holds no tombstones (deletes remove its rows) and
     compacts with its epoch pointer re-pinned to the fresh snapshot."""
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
-        read_bucketed_sink,
-    )
-
     counts: dict[str, int] = {}
     with bucketed_sink_lock(path):
         for store, bucket_col in (
@@ -935,7 +758,7 @@ def compact_join_view(
             ("fact_by_fk", "fk"),
         ):
             sp = os.path.join(path, store)
-            mf = _read_bucket_manifest(sp)
+            mf = read_bucket_manifest(sp)
             if mf is None:
                 continue
             n_buckets, entries = mf
@@ -946,19 +769,18 @@ def compact_join_view(
                 cur = cur.filter(F.col("live"))
             compacted = cur.repartition(
                 max(1, files_per_bucket * n_buckets),
-                _bucket_of([bucket_col], n_buckets),
+                bucket_of([bucket_col], n_buckets),
             ).localCheckpoint(eager=True)
             counts[store] = compacted.count()
-            _commit_bucketed(
+            commit_bucketed(
                 compacted, sp, [bucket_col], n_buckets, entries,
                 sorted(entries), retain=retain, return_df=False,
             )
         # view table: rewrite the committed buckets and re-pin the
         # pointer to the fresh snapshot at the SAME epoch
-        cur_ptr = _view_current(path)
-        if cur_ptr is not None:
-            res = _resolve_view_entries(path)
-            vroot = os.path.join(path, "view")
+        vroot = os.path.join(path, "view")
+        res = resolve_pointer(vroot, "join view")
+        if res is not None:
             entries, epoch = res
             dirs = [
                 os.path.join(vroot, rel)
@@ -966,21 +788,18 @@ def compact_join_view(
                 if os.path.isdir(os.path.join(vroot, rel))
             ]
             if dirs:
-                vmf = _read_bucket_manifest(vroot)
+                vmf = read_bucket_manifest(vroot)
                 n_buckets = vmf[0]
                 rows = spark.read.parquet(*dirs).select(*_VIEW_COLS)
                 compacted = rows.repartition(
                     max(1, files_per_bucket * n_buckets),
-                    _bucket_of(["key"], n_buckets),
+                    bucket_of(["key"], n_buckets),
                 ).localCheckpoint(eager=True)
                 counts["view"] = compacted.count()
-                _commit_bucketed(
+                commit_bucketed(
                     compacted, vroot, ["key"], n_buckets,
                     dict(vmf[1]), sorted(dict(vmf[1])),
                     retain=max(3, retain), return_df=False,
                 )
-                vname = _bucket_history_name(vroot)
-                _write_atomic(
-                    os.path.join(vroot, "_current"), f"{vname}:{epoch}"
-                )
+                publish_pointer(vroot, epoch)
     return counts

@@ -20,6 +20,15 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from pymongo_change_stream_reader_spark.storage import (
+    commit_epoch,
+    dir_has_parquet,
+    epoch_committed,
+    epoch_marker,
+    query_id,
+    require_local_path,
+)
+
 logger = logging.getLogger(__name__)
 
 # Process-wide cache of topics known to exist (mirrors the reference's
@@ -73,66 +82,6 @@ def _ensure_topics(bootstrap_servers: str, topics: set[str], settings=None) -> N
         _created_topics.add(topic_name)
 
 
-def _require_local_path(path: str, what: str) -> None:
-    """The marker/demux dirs are managed with os.path — a URI scheme
-    (s3a://, hdfs://) would silently land in a literal local './s3a:'
-    directory and defeat the replay dedup.  Refuse loudly instead of
-    degrading (never silently mis-translate)."""
-    if "://" in path:
-        raise ValueError(
-            f"{what} {path!r} uses a URI scheme; the epoch-marker "
-            "sinks manage markers on the LOCAL filesystem only — use "
-            "a local path or a transactional table sink"
-        )
-
-
-def _query_id(checkpoint_location: str | None) -> str:
-    """The streaming query id from the checkpoint's metadata file.
-
-    Stable across restarts of the SAME checkpoint; a new id appears
-    when the checkpoint is lost/reset — which is exactly the boundary
-    where epoch ids stop being unique, so the id scopes the epoch
-    markers: exactly-once within a checkpoint lifetime, honest
-    at-least-once RE-DELIVERY (never silent at-most-once loss) across
-    checkpoint loss.  Empty when no metadata exists (marker names
-    then degrade to the bare epoch form)."""
-    import json
-    import os
-
-    if not checkpoint_location:
-        return ""
-    meta = os.path.join(checkpoint_location, "metadata")
-    try:
-        with open(meta) as fh:
-            qid = json.load(fh).get("id", "")
-            return f"{qid}-" if qid else ""
-    except (OSError, ValueError):
-        return ""
-
-
-def _epoch_committed(marker_dir: str, epoch_id: int, qid: str = "") -> bool:
-    import os
-
-    return os.path.exists(
-        os.path.join(marker_dir, f"epoch-{qid}{epoch_id:020d}")
-    )
-
-
-def _commit_epoch(marker_dir: str, epoch_id: int, qid: str = "") -> None:
-    """Durably mark an epoch as written (atomic rename — the marker
-    either exists completely or not at all)."""
-    import os
-
-    os.makedirs(marker_dir, exist_ok=True)
-    marker = os.path.join(marker_dir, f"epoch-{qid}{epoch_id:020d}")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(epoch_id))
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, marker)
-
-
 def foreach_batch_kafka_with_topics(
     bootstrap_servers: str, settings
 ) -> Callable[[DataFrame, int], None]:
@@ -153,12 +102,12 @@ def foreach_batch_kafka_with_topics(
     not row count; the write itself stays fully distributed."""
     import os
 
-    _require_local_path(settings.checkpoint_location, "checkpoint_location")
+    require_local_path(settings.checkpoint_location, "checkpoint_location")
     marker_dir = os.path.join(settings.checkpoint_location, "epoch_log")
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        qid = _query_id(settings.checkpoint_location)
-        if _epoch_committed(marker_dir, epoch_id, qid):
+        qid = query_id(settings.checkpoint_location)
+        if epoch_committed(marker_dir, epoch_id, qid):
             logger.info("epoch %s already produced; skipping replay", epoch_id)
             return
         if batch.isEmpty():  # nothing to produce, nothing to mark
@@ -174,7 +123,7 @@ def foreach_batch_kafka_with_topics(
             .option("kafka.enable.idempotence", "true")
             .save()
         )
-        _commit_epoch(marker_dir, epoch_id, qid)
+        commit_epoch(marker_dir, epoch_id, qid)
 
     return write_batch
 
@@ -200,11 +149,10 @@ def foreach_batch_parquet_demux(
     import os
     import shutil
 
-    _require_local_path(out_dir, "demux out_dir")
+    require_local_path(out_dir, "demux out_dir")
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        qid = _query_id(checkpoint_location)
-        final = os.path.join(out_dir, f"epoch-{qid}{epoch_id:020d}")
+        final = epoch_marker(out_dir, epoch_id, query_id(checkpoint_location))
         if os.path.exists(final):
             logger.info("epoch %s already published; skipping replay", epoch_id)
             return
@@ -222,20 +170,6 @@ def foreach_batch_parquet_demux(
     return write_batch
 
 
-def _dir_has_parquet(path: str) -> bool:
-    """True when any parquet file exists under ``path`` (LOCAL
-    filesystem — callers gate URIs via _require_local_path).  Shared by
-    the demux reader and the dedup-relay index/flags probes so the
-    probe cannot drift between sibling modules."""
-    import os
-
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(path)
-        for f in files
-    )
-
-
 def read_parquet_demux(spark, out_dir: str):
     """Read every PUBLISHED epoch of a parquet-demux sink (staging
     dirs are invisible by construction).  Each epoch dir is its own
@@ -245,10 +179,6 @@ def read_parquet_demux(spark, out_dir: str):
     import os
     from functools import reduce
 
-    # an epoch published from an empty batch (or a _SUCCESS-only
-    # dir) must not poison the union with schema inference errors
-    has_parquet = _dir_has_parquet
-
     epochs = sorted(
         d
         for d in os.listdir(out_dir)
@@ -257,7 +187,9 @@ def read_parquet_demux(spark, out_dir: str):
     frames = [
         spark.read.parquet(os.path.join(out_dir, e))
         for e in epochs
-        if has_parquet(os.path.join(out_dir, e))
+        # an epoch published from an empty batch (or a _SUCCESS-only
+        # dir) must not poison the union with schema inference errors
+        if dir_has_parquet(os.path.join(out_dir, e))
     ]
     if not frames:
         raise FileNotFoundError(f"no published epochs under {out_dir}")

@@ -39,7 +39,7 @@ Contract:
   compacted Kafka topic).
 
 Scale: each micro-batch touches only the buckets its keys hash into
-(the bucketed versioned-sink protocol from plans/pipeline.py — write
+(the bucketed versioned-sink protocol from storage.py — write
 cost scales with touched partitions, not replica size); the per-batch
 reduction is one hash aggregation on the key.
 """
@@ -50,13 +50,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pymongo_change_stream_reader_spark.plans.pipeline import (
+from pymongo_change_stream_reader_spark.storage import (
     PipelineError,
-    _bucket_of,
-    _commit_bucketed,
-    _read_bucket_manifest,
+    bucket_entries,
+    bucket_of,
     bucketed_sink_lock,
+    commit_bucketed,
+    read_bucket_manifest,
     read_bucketed_sink,
+    read_entry_dirs,
+    read_schemaed,
 )
 
 _KEY = "documentKey"
@@ -94,6 +97,84 @@ def _last_event_per_key(
         "key", "p.op", "p.doc", *[F.col(f"p.{c}") for c in _ORDER],
         *extras,
     )
+
+
+def merge_lww(
+    spark: SparkSession,
+    winners: DataFrame,
+    store: str,
+    merge_on: list[str],
+    bucket_on: list[str],
+    n_buckets: int,
+    changed: list[int] | None = None,
+    schema=None,
+    batch_flag: str | None = None,
+) -> tuple[DataFrame, DataFrame, dict, list[int]]:
+    """LWW merge of ``winners`` against the committed rows of their
+    touched buckets in ``store`` (bucketed by ``bucket_on``, row
+    identity ``merge_on`` — the secondary index buckets by fk but
+    merges per (fk, key)): returns (merged rows to commit, the old
+    rows frame, manifest entries, changed buckets).  Winner wins on
+    triple >= (replay-safe).  ``changed`` passes a precomputed
+    touched-bucket list (the batch computes every store's buckets in
+    ONE combined job — see join_view_batch); None collects it here.
+
+    r14 shape: ONE hash aggregation (union both sides tagged, max_by
+    on (triple, side)) replaces the r13 full-outer join — the join
+    form paid two exchanges plus a sort per merge; this pays one
+    exchange with map-side partial aggregation.  A triple TIE resolves
+    to the new side (__new orders last), exactly the join form's
+    ``trip(new) >= trip(old)``; NULL merge keys group
+    together, matching the join form's eqNullSafe equality.  Both
+    sides hold at most one row per merge key (store invariant /
+    pre-reduced batch), so max_by picks the lone row when only one
+    side has it.
+
+    ``batch_flag``: when set, the merged frame carries an extra
+    BOOLEAN column of that name — True iff the merge key appeared in
+    ``winners``.  Callers derive their post-LWW batch subset with a
+    filter on the already-checkpointed merged frame instead of a
+    separate semi-join job (drop the column before commit)."""
+    if changed is None:
+        changed = sorted(
+            r["b"]
+            for r in winners.select(
+                bucket_of(bucket_on, n_buckets).alias("b")
+            )
+            .distinct()
+            .collect()
+        )
+    entries = bucket_entries(store, n_buckets, f"store {store!r}")
+    rels = [entries[k] for k in changed if k in entries]
+    if schema is not None:
+        # schema-fixed stores skip the per-version driver-side
+        # footer inference
+        old = read_schemaed(spark, store, rels, schema)
+    else:
+        old = read_entry_dirs(spark, store, rels)
+    if old is None:
+        old = spark.createDataFrame([], winners.schema)
+    cols = winners.columns
+    u = (
+        old.select(*cols)
+        .withColumn("__new", F.lit(0))
+        .unionByName(winners.select(*cols).withColumn("__new", F.lit(1)))
+    )
+    payload = F.struct(*[F.col(c) for c in cols])
+    ordk = F.struct(*[F.col(c) for c in _ORDER], F.col("__new"))
+    aggs = [F.max_by(payload, ordk).alias("__w")]
+    if batch_flag is not None:
+        aggs.append(
+            F.max("__new").cast("boolean").alias(batch_flag)
+        )
+    merged = (
+        u.groupBy(*merge_on)
+        .agg(*aggs)
+        .select(
+            "__w.*", *([batch_flag] if batch_flag is not None else [])
+        )
+    )
+    return merged, old, entries, changed
 
 
 def _last_event_per_key_with_deltas(batch: DataFrame) -> DataFrame:
@@ -331,7 +412,7 @@ def materialize_change_batch(
     without a document, or an update carrying neither, raises.
     ``retain`` widens the replica's time-travel window (the newest N
     commits stay readable via ``read_bucketed_sink(path, -n)``; see
-    _commit_bucketed) — at high trigger rates prefer the default 2 and
+    commit_bucketed) — at high trigger rates prefer the default 2 and
     periodic ``vacuum_bucketed_sink``, since every retained commit
     pins its superseded bucket dirs on disk.
 
@@ -381,7 +462,7 @@ def materialize_change_batch(
         last = reduced.drop("__bad")
     else:
         last = _last_event_per_key(data).localCheckpoint(eager=True)
-    bcol = _bucket_of(["key"], n_buckets)
+    bcol = bucket_of(["key"], n_buckets)
     changed = sorted(
         r["b"] for r in last.select(bcol.alias("b")).distinct().collect()
     )
@@ -402,19 +483,8 @@ def _materialize_locked(
 ) -> DataFrame | None:
     """The manifest-read → LWW-merge → commit span of
     materialize_change_batch; callers hold bucketed_sink_lock."""
-    import os
-
-    mf = _read_bucket_manifest(path)
-    if mf is not None and mf[0] != n_buckets:
-        raise PipelineError(
-            f"replica at {path!r} has {mf[0]} buckets, not {n_buckets}"
-        )
-    entries = dict(mf[1]) if mf is not None else {}
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
-        _read_entry_dirs,
-    )
-
-    old = _read_entry_dirs(
+    entries = bucket_entries(path, n_buckets, f"replica at {path!r}")
+    old = read_entry_dirs(
         spark, path, [entries[k] for k in changed if k in entries]
     )
     new = last
@@ -423,7 +493,7 @@ def _materialize_locked(
         patch = _patch_doc_udf()
     if old is not None and not with_deltas:
         # post-image path (r14): ONE hash aggregation replaces the
-        # full-outer join (the join_view._merge_lww rewrite — one
+        # full-outer join (the join_view.merge_lww rewrite — one
         # exchange with map-side partials instead of two + a sort).
         # Tie on the triple -> the new effect wins, matching the join
         # form's `stale = trip(n) < trip(o)` exactly; a delete's
@@ -528,7 +598,7 @@ def _materialize_locked(
         else:
             first_doc = F.when(F.col("op") != "delete", F.col("doc"))
         merged = new.select("key", first_doc.alias("doc"), *_ORDER)
-    return _commit_bucketed(
+    return commit_bucketed(
         merged, path, ["key"], n_buckets, entries, changed, retain=retain,
         return_df=return_df,
     )
@@ -556,7 +626,7 @@ def bootstrap_replica(
     stream for everything after)."""
     # existence probe repeated under the lock below; this early copy
     # just fails fast before the snapshot materialization
-    if _read_bucket_manifest(path) is not None:
+    if read_bucket_manifest(path) is not None:
         raise PipelineError(
             f"replica at {path!r} already exists — bootstrap seeds a NEW "
             "replica; the change stream maintains an existing one"
@@ -591,12 +661,12 @@ def bootstrap_replica(
         )
     # entries is empty, so `changed` has nothing to prune: ()
     with bucketed_sink_lock(path):
-        if _read_bucket_manifest(path) is not None:
+        if read_bucket_manifest(path) is not None:
             raise PipelineError(
                 f"replica at {path!r} already exists — bootstrap seeds a "
                 "NEW replica; the change stream maintains an existing one"
             )
-        return _commit_bucketed(
+        return commit_bucketed(
             seeded, path, ["key"], n_buckets, {}, (), retain=retain
         )
 
@@ -656,7 +726,7 @@ def compact_replica(
     # its manifest swap would otherwise be silently erased by the
     # compaction's swap (last-writer-wins lost update)
     with bucketed_sink_lock(path):
-        mf = _read_bucket_manifest(path)
+        mf = read_bucket_manifest(path)
         if mf is None:
             return None
         n_buckets, entries = mf
@@ -670,14 +740,14 @@ def compact_replica(
         # dir)
         compacted = current.repartition(
             max(1, files_per_bucket * n_buckets),
-            _bucket_of(["key"], n_buckets),
+            bucket_of(["key"], n_buckets),
         )
         # NOTE: the compact commit applies its own `retain` — with the
         # default 2 it also narrows a wider time-travel window (history
         # snapshots beyond `retain` are pruned), consistent with the
         # documented compaction trade-off; pass a larger retain to keep
         # it.
-        return _commit_bucketed(
+        return commit_bucketed(
             compacted, path, ["key"], n_buckets, entries, sorted(entries),
             retain=retain,
         )

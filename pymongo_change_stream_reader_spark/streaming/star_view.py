@@ -63,32 +63,27 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pymongo_change_stream_reader_spark.plans.pipeline import (
+from pymongo_change_stream_reader_spark.storage import (
     PipelineError,
-    _bucket_of,
-    _commit_bucketed,
-    _commit_bucketed_fused,
-    _read_bucket_manifest,
-    _read_entry_dirs,
-    _write_atomic,
+    bucket_entries,
+    bucket_of,
     bucketed_sink_lock,
-)
-from pymongo_change_stream_reader_spark.streaming.join_view import (
-    _bucket_history_name,
-    _flatten_bucket_dirs,
-    _read_delta_dir,
-    _read_schemaed,
-)
-from pymongo_change_stream_reader_spark.streaming.join_view import (
-    _merge_lww as _join_view_merge_lww,
+    commit_bucketed,
+    commit_bucketed_fused,
+    flatten_bucket_dirs,
+    pointer_current,
+    publish_pointer,
+    read_bucket_manifest,
+    read_bucketed_sink,
+    read_delta_dir,
+    read_schemaed,
+    resolve_pointer,
+    write_atomic,
 )
 from pymongo_change_stream_reader_spark.streaming.materialize import (
     _ORDER,
     _last_event_per_key,
-)
-from pymongo_change_stream_reader_spark.streaming.view_pointer import (
-    resolve_view_entries,
-    view_pointer_current,
+    merge_lww,
 )
 
 __all__ = [
@@ -119,16 +114,6 @@ def _view_cols(sides: list[str]) -> list[str]:
     return cols
 
 
-def _current(path: str) -> tuple[str, int] | None:
-    return view_pointer_current(path)
-
-
-def _resolve_view_entries(path: str) -> tuple[dict, int] | None:
-    """Shared ``_current`` pointer resolver
-    (streaming/view_pointer.py — hoisted join/star common logic)."""
-    return resolve_view_entries(path, "star view")
-
-
 def read_star_view(spark: SparkSession, path: str) -> DataFrame | None:
     """The current star table; None before the first applied batch.
     Columns: key, fact_doc, then (fk_<side>, dim_<side>) per side in
@@ -137,11 +122,11 @@ def read_star_view(spark: SparkSession, path: str) -> DataFrame | None:
     if not os.path.exists(cfg_path):
         return None
     sides = [d["side"] for d in json.load(open(cfg_path))["dims"]]
-    res = _resolve_view_entries(path)
+    vroot = os.path.join(path, "view")
+    res = resolve_pointer(vroot, "star view")
     if res is None:
         return None
     entries, _ep = res
-    vroot = os.path.join(path, "view")
     dirs = [
         os.path.join(vroot, rel)
         for rel in entries.values()
@@ -153,32 +138,6 @@ def read_star_view(spark: SparkSession, path: str) -> DataFrame | None:
             [], ", ".join(f"{c} STRING" for c in cols)
         )
     return spark.read.parquet(*dirs).select(*cols)
-
-
-def _merge_lww(
-    spark: SparkSession,
-    winners: DataFrame,
-    store: str,
-    merge_on: list[str],
-    bucket_on: list[str],
-    n_buckets: int,
-    changed: list[int],
-    batch_flag: str | None = None,
-) -> tuple[DataFrame, DataFrame, dict]:
-    """The SHARED one-aggregation LWW merge (streaming/join_view.py —
-    one implementation for the join view, star view and ER registry)
-    with the star conventions pinned: touched-bucket list always
-    precomputed (the star batch discovers every store's buckets in
-    combined jobs) and schema-on-read from the winners frame (the
-    stores' layouts are config-fixed, so the per-version driver-side
-    footer inference is skipped — measured at ~0.1 s per read x 1+2N
-    merges per batch).  ``batch_flag`` marks merge keys present in
-    the batch (join_view._merge_lww docs)."""
-    merged, old, entries, _changed = _join_view_merge_lww(
-        spark, winners, store, merge_on, bucket_on, n_buckets,
-        changed=changed, schema=winners.schema, batch_flag=batch_flag,
-    )
-    return merged, old, entries
 
 
 def star_view_batch(
@@ -253,8 +212,8 @@ def star_view_batch(
                     "do not compose"
                 )
         else:
-            _write_atomic(cfg_path, json.dumps(cfg))
-        cur = _current(path)
+            write_atomic(cfg_path, json.dumps(cfg))
+        cur = pointer_current(os.path.join(path, "view"))
         if cur is not None and cur[1] >= epoch:
             return False
 
@@ -341,13 +300,13 @@ def star_view_batch(
 
         # --- job 1: validation + every store's touched buckets ------
         wb_frames = fact_winners.select(
-            F.lit(0).alias("t"), _bucket_of(["key"], n_buckets).alias("b")
+            F.lit(0).alias("t"), bucket_of(["key"], n_buckets).alias("b")
         )
         for i, s in enumerate(sides):
             wb_frames = wb_frames.unionByName(
                 dim_winners[s].select(
                     F.lit(10 + i).alias("t"),
-                    _bucket_of(["jk"], n_buckets).alias("b"),
+                    bucket_of(["jk"], n_buckets).alias("b"),
                 )
             )
         wb = wb_frames.unionByName(violations).distinct().collect()
@@ -370,9 +329,9 @@ def star_view_batch(
         # the merges carry an __in_batch flag, so the post-LWW batch
         # subsets are FILTERS over the one checkpointed merged frame
         # instead of three dedicated semi-join jobs (r14)
-        fact_merged_f, fact_old, f_entries = _merge_lww(
+        fact_merged_f, fact_old, f_entries, _ = merge_lww(
             spark, fact_winners, facts_path, ["key"], ["key"], n_buckets,
-            f_changed, batch_flag="__in_batch",
+            f_changed, schema=fact_winners.schema, batch_flag="__in_batch",
         )
         fact_merged_f = fact_merged_f.localCheckpoint(eager=False)
         fact_merged = fact_merged_f.drop("__in_batch")
@@ -381,9 +340,10 @@ def star_view_batch(
         ).drop("__in_batch")
         dim_merged, dim_entries, batch_dim_post = {}, {}, {}
         for s in sides:
-            dm, _old, de = _merge_lww(
+            dm, _old, de, _ = merge_lww(
                 spark, dim_winners[s], dims_path[s], ["key"], ["jk"],
-                n_buckets, d_changed[s], batch_flag="__in_batch",
+                n_buckets, d_changed[s], schema=dim_winners[s].schema,
+                batch_flag="__in_batch",
             )
             dm = dm.localCheckpoint(eager=False)
             dim_merged[s] = dm.drop("__in_batch")
@@ -441,10 +401,10 @@ def star_view_batch(
             # the SAME collect (the r11 path paid a dedicated job 3).
             affected = None
             for s in sides:
-                imf = _read_bucket_manifest(idx_path[s])
+                imf = read_bucket_manifest(idx_path[s])
                 if imf is None:
                     continue
-                rows = _read_schemaed(
+                rows = read_schemaed(
                     spark, idx_path[s],
                     [imf[1][k] for k in d_changed[s] if k in imf[1]],
                     idx_winners[s].schema,
@@ -520,7 +480,7 @@ def star_view_batch(
                         F.col("live") & F.col(f"fk_{s}").isNotNull()
                     ).select(
                         F.lit(2 * len(sides) + i).alias("t"),
-                        _bucket_of([f"fk_{s}"], n_buckets).alias("b"),
+                        bucket_of([f"fk_{s}"], n_buckets).alias("b"),
                     )
                 )
             probe_frames = (
@@ -538,11 +498,11 @@ def star_view_batch(
             # ---- recompute every R row's whole view row -------------
             delta = R
             for s in sides:
-                dmf = _read_bucket_manifest(dims_path[s])
+                dmf = read_bucket_manifest(dims_path[s])
                 if dmf is None:
                     dim_base = dim_merged[s].filter(F.lit(False))
                 else:
-                    rows = _read_schemaed(
+                    rows = read_schemaed(
                         spark, dims_path[s],
                         [dmf[1][k] for k in rbuckets[s] if k in dmf[1]],
                         dim_winners[s].schema,
@@ -589,12 +549,12 @@ def star_view_batch(
             # lists come off the written dirs (zero driver jobs)
             # instead of riding probe legs.
             du = delta.withColumn(
-                "__b", _bucket_of(["key"], n_buckets)
+                "__b", bucket_of(["key"], n_buckets)
             ).withColumn("__delta", F.lit("view"))
             for s in sides:
                 du = du.unionByName(
                     idx_winners[s].withColumn(
-                        "__b", _bucket_of(["fk"], n_buckets)
+                        "__b", bucket_of(["fk"], n_buckets)
                     ).withColumn("__delta", F.lit(f"idx_{s}")),
                     allowMissingColumns=True,
                 )
@@ -607,13 +567,13 @@ def star_view_batch(
                 dst = os.path.join(tmp, sub)
                 if os.path.isdir(src):
                     os.rename(src, dst)
-                    derived[sub] = _flatten_bucket_dirs(dst)
+                    derived[sub] = flatten_bucket_dirs(dst)
                 else:
                     # an empty frame writes no partition dir — keep
                     # the layout so replays read an empty delta
                     os.makedirs(dst, exist_ok=True)
                     derived[sub] = []
-            _write_atomic(
+            write_atomic(
                 os.path.join(tmp, "_meta.json"),
                 json.dumps(
                     {
@@ -634,7 +594,7 @@ def star_view_batch(
         meta = json.load(open(os.path.join(deltas_dir, "_meta.json")))
         i_changed = meta["i_changed"]
         for s in sides:
-            idx_winners[s] = _read_delta_dir(
+            idx_winners[s] = read_delta_dir(
                 spark,
                 os.path.join(deltas_dir, f"idx_{s}"),
                 idx_winners[s].schema,
@@ -642,9 +602,9 @@ def star_view_batch(
 
         idx_merged, idx_entries = {}, {}
         for s in sides:
-            im, _io, ie = _merge_lww(
+            im, _io, ie, _ = merge_lww(
                 spark, idx_winners[s], idx_path[s], ["fk", "key"], ["fk"],
-                n_buckets, i_changed[s],
+                n_buckets, i_changed[s], schema=idx_winners[s].schema,
             )
             idx_merged[s] = im
             idx_entries[s] = ie
@@ -653,13 +613,7 @@ def star_view_batch(
             os.path.join(deltas_dir, "view")
         )
         vroot = os.path.join(path, "view")
-        vmf = _read_bucket_manifest(vroot)
-        if vmf is not None and vmf[0] != n_buckets:
-            raise PipelineError(
-                f"star view at {path!r} has {vmf[0]} buckets, "
-                f"not {n_buckets}"
-            )
-        ventries = dict(vmf[1]) if vmf is not None else {}
+        ventries = bucket_entries(vroot, n_buckets, f"star view at {path!r}")
 
         # pre-upgrade delta epochs lack the persisted bucket list;
         # fall back to the discovery collect over the tiny file
@@ -668,14 +622,14 @@ def star_view_batch(
             vchanged = sorted(
                 r["b"]
                 for r in d.select(
-                    _bucket_of(["key"], n_buckets).alias("b")
+                    bucket_of(["key"], n_buckets).alias("b")
                 )
                 .distinct()
                 .collect()
             )
-        res = _resolve_view_entries(path)
+        res = resolve_pointer(vroot, "star view")
         committed = dict(res[0]) if res is not None else {}
-        base_rows = _read_schemaed(
+        base_rows = read_schemaed(
             spark, vroot,
             [committed[k] for k in vchanged if k in committed],
             ", ".join(f"{c} STRING" for c in VIEW_COLS),
@@ -691,7 +645,7 @@ def star_view_batch(
         )
 
         # ONE fused write commits ALL 2+2N stores (r14 — the r13
-        # wave pooled 2+2N separate _commit_bucketed writes, each its
+        # wave pooled 2+2N separate commit_bucketed writes, each its
         # own Spark action + commit protocol); per-store manifest
         # finalize stays sequential filesystem work.  Crash surface
         # unchanged: a kill between finalizes leaves a store prefix
@@ -728,12 +682,9 @@ def star_view_batch(
                 changed=vchanged, retain=max(3, retain),
             )
         )
-        _commit_bucketed_fused(specs, path)
+        commit_bucketed_fused(specs, path)
 
-        vname = _bucket_history_name(vroot)
-        _write_atomic(
-            os.path.join(vroot, "_current"), f"{vname}:{epoch}"
-        )
+        publish_pointer(vroot, epoch)
 
         droot = os.path.join(path, "view_deltas")
         depochs = sorted(
@@ -765,10 +716,6 @@ def compact_star_view(
     purged tombstone lets a late out-of-order event older than the
     delete resurrect a row (and with it a view row) — purge only
     past the source's reordering horizon."""
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
-        read_bucketed_sink,
-    )
-
     cfg_path = os.path.join(path, "_config.json")
     if not os.path.exists(cfg_path):
         return {}
@@ -781,7 +728,7 @@ def compact_star_view(
     with bucketed_sink_lock(path):
         for store, bucket_col in stores:
             sp = os.path.join(path, store)
-            mf = _read_bucket_manifest(sp)
+            mf = read_bucket_manifest(sp)
             if mf is None:
                 continue
             n_buckets, entries = mf
@@ -792,17 +739,16 @@ def compact_star_view(
                 cur = cur.filter(F.col("live"))
             compacted = cur.repartition(
                 max(1, files_per_bucket * n_buckets),
-                _bucket_of([bucket_col], n_buckets),
+                bucket_of([bucket_col], n_buckets),
             ).localCheckpoint(eager=True)
             counts[store] = compacted.count()
-            _commit_bucketed(
+            commit_bucketed(
                 compacted, sp, [bucket_col], n_buckets, entries,
                 sorted(entries), retain=retain, return_df=False,
             )
-        cur_ptr = _current(path)
-        if cur_ptr is not None:
-            res = _resolve_view_entries(path)
-            vroot = os.path.join(path, "view")
+        vroot = os.path.join(path, "view")
+        res = resolve_pointer(vroot, "star view")
+        if res is not None:
             entries, epoch = res
             dirs = [
                 os.path.join(vroot, rel)
@@ -810,23 +756,20 @@ def compact_star_view(
                 if os.path.isdir(os.path.join(vroot, rel))
             ]
             if dirs:
-                vmf = _read_bucket_manifest(vroot)
+                vmf = read_bucket_manifest(vroot)
                 n_buckets = vmf[0]
                 rows = spark.read.parquet(*dirs).select(
                     *_view_cols(sides)
                 )
                 compacted = rows.repartition(
                     max(1, files_per_bucket * n_buckets),
-                    _bucket_of(["key"], n_buckets),
+                    bucket_of(["key"], n_buckets),
                 ).localCheckpoint(eager=True)
                 counts["view"] = compacted.count()
-                _commit_bucketed(
+                commit_bucketed(
                     compacted, vroot, ["key"], n_buckets,
                     dict(vmf[1]), sorted(dict(vmf[1])),
                     retain=max(3, retain), return_df=False,
                 )
-                vname = _bucket_history_name(vroot)
-                _write_atomic(
-                    os.path.join(vroot, "_current"), f"{vname}:{epoch}"
-                )
+                publish_pointer(vroot, epoch)
     return counts

@@ -8,6 +8,7 @@ import os
 
 import pytest
 
+from pymongo_change_stream_reader_spark import storage
 from pymongo_change_stream_reader_spark.plans.pipeline import PipelineError
 from pymongo_change_stream_reader_spark.schema import CHANGE_EVENT_SCHEMA
 from pymongo_change_stream_reader_spark.streaming import agg_view as av
@@ -169,16 +170,16 @@ def test_crash_between_deltas_and_keys_commit(spark, tmp_path, monkeypatch):
     # raises BEFORE committing anything: deltas persisted, keys
     # pre-batch, groups pre-batch
     _crash_then_replay(
-        spark, tmp_path, monkeypatch, "_commit_bucketed_fused"
+        spark, tmp_path, monkeypatch, "commit_bucketed_fused"
     )
 
 
 def test_crash_between_keys_and_groups_commit(spark, tmp_path, monkeypatch):
-    # _write_atomic (the groups pointer swap) raises AFTER keys landed:
-    # without the persisted-deltas rule the replay would recompute
-    # zero deltas against the already-updated keys store and the
-    # groups table would silently lose the batch
-    _crash_then_replay(spark, tmp_path, monkeypatch, "_write_atomic")
+    # publish_pointer (the groups pointer swap) raises AFTER keys
+    # landed: without the persisted-deltas rule the replay would
+    # recompute zero deltas against the already-updated keys store and
+    # the groups table would silently lose the batch
+    _crash_then_replay(spark, tmp_path, monkeypatch, "publish_pointer")
 
 
 def test_interleaved_batches_match_single_apply(spark, tmp_path):
@@ -298,8 +299,8 @@ def test_touched_group_rewrites_only_its_bucket(spark, tmp_path):
     """The r10 scale contract: the groups store is bucketed by grp,
     and a batch touching ONE group commits a version dir containing
     exactly that group's bucket — not a whole-table rewrite."""
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
-        _read_bucket_manifest,
+    from pymongo_change_stream_reader_spark.storage import (
+        read_bucket_manifest,
     )
 
     path = str(tmp_path / "view")
@@ -313,14 +314,14 @@ def test_touched_group_rewrites_only_its_bucket(spark, tmp_path):
     )
     agg_view_batch(b0, path, epoch=0, value_type="long", n_buckets=8)
     groot = os.path.join(path, "groups")
-    before = dict(_read_bucket_manifest(groot)[1])
+    before = dict(read_bucket_manifest(groot)[1])
     assert len(before) > 2  # the 8 groups spread over >2 buckets
     # epoch 1 touches exactly one group
     agg_view_batch(
         _frame(spark, [_ev("b1", "update", 11, 1, "k1", _doc(99, "g1"))]),
         path, epoch=1, value_type="long", n_buckets=8,
     )
-    after = dict(_read_bucket_manifest(groot)[1])
+    after = dict(read_bucket_manifest(groot)[1])
     changed = {k for k in after if after[k] != before.get(k)}
     assert len(changed) == 1, (before, after)
     # untouched buckets keep serving their PRIOR files (no rewrite)
@@ -338,17 +339,17 @@ def test_groups_pointer_is_the_commit_point(spark, tmp_path, monkeypatch):
         path, epoch=0, value_type="long", n_buckets=4,
     )
     b1 = _frame(spark, [_ev("b1", "insert", 11, 1, "k2", _doc(3, "a"))])
-    real = av._write_atomic
+    real = storage.write_atomic
 
     def boom(dest, body):
         if dest.endswith("_current"):
             raise RuntimeError("crash at pointer swap")
         return real(dest, body)
 
-    monkeypatch.setattr(av, "_write_atomic", boom)
+    monkeypatch.setattr(storage, "write_atomic", boom)
     with pytest.raises(RuntimeError, match="pointer swap"):
         agg_view_batch(b1, path, epoch=1, value_type="long", n_buckets=4)
-    monkeypatch.setattr(av, "_write_atomic", real)
+    monkeypatch.setattr(storage, "write_atomic", real)
     # the phantom commit is invisible: readers resolve via _current
     assert _groups(spark, path) == {"a": (1, 5)}
     agg_view_batch(b1, path, epoch=1, value_type="long", n_buckets=4)
@@ -385,7 +386,7 @@ def test_legacy_whole_table_store_migrates_in_place(spark, tmp_path):
                 shutil.rmtree(p)
             else:
                 os.unlink(p)
-    av._write_atomic(os.path.join(groot, "_current"), "g-000000:0")
+    storage.write_atomic(os.path.join(groot, "_current"), "g-000000:0")
     assert _groups(spark, path) == {"a": (1, 5), "b": (1, 2)}
     # the next apply migrates and the g- dir disappears
     agg_view_batch(
@@ -510,17 +511,17 @@ def test_minmax_extremum_delete_replays(spark, tmp_path, monkeypatch):
         path, epoch=0, **kw,
     )
     b1 = _frame(spark, [_ev("b1", "delete", 11, 2, "k2", None)])
-    real = av._write_atomic
+    real = storage.write_atomic
 
     def boom(dest, body):
         if dest.endswith("_current"):
             raise RuntimeError("crash at pointer swap")
         return real(dest, body)
 
-    monkeypatch.setattr(av, "_write_atomic", boom)
+    monkeypatch.setattr(storage, "write_atomic", boom)
     with pytest.raises(RuntimeError, match="pointer swap"):
         agg_view_batch(b1, path, epoch=1, **kw)
-    monkeypatch.setattr(av, "_write_atomic", real)
+    monkeypatch.setattr(storage, "write_atomic", real)
     # the persisted deltas carry the rescan flag
     assert os.path.isdir(os.path.join(path, "deltas", "epoch=1"))
     assert _groups_mm(spark, path) == {"a": (2, 12, 3, 9)}  # pre-crash

@@ -61,6 +61,7 @@ ROWS = [tuple(r) for r in json.loads(sys.argv[3])]
 SCHEMA = sys.argv[4]
 
 from pymongo_change_stream_reader_spark.session import get_spark
+import pymongo_change_stream_reader_spark.storage as storage
 import pymongo_change_stream_reader_spark.streaming.agg_view as av
 
 spark = get_spark(app_name="aggview-chaos", cpus=4, shuffle_partitions=4)
@@ -75,17 +76,19 @@ if kill_mode == "before-keys":
         # plain-mode path commits through the fused write, minmax
         # through per-store commits — hook both.
         die("before-keys")
-    av._commit_bucketed = cb_hook
-    av._commit_bucketed_fused = cb_hook
+    av.commit_bucketed = cb_hook
+    av.commit_bucketed_fused = cb_hook
 else:
-    real_wa = av._write_atomic  # only the groups pointer in agg_view
+    real_wa = storage.write_atomic
     def wa_hook(dest, body):
+        if not dest.endswith("_current"):  # only the groups pointer
+            return real_wa(dest, body)
         if kill_mode == "before-pointer":
             die("before-pointer")
         real_wa(dest, body)
         if kill_mode == "after-pointer":
             die("after-pointer")
-    av._write_atomic = wa_hook
+    storage.write_atomic = wa_hook
 
 batch = spark.createDataFrame(ROWS, SCHEMA).selectExpr(
     "operationType", "documentKey", "fullDocument",
@@ -176,18 +179,18 @@ import os, signal, sys
 path = sys.argv[1]
 from pymongo_change_stream_reader_spark.session import get_spark
 import pymongo_change_stream_reader_spark.streaming.agg_view as av
-import pymongo_change_stream_reader_spark.plans.pipeline as pp
+import pymongo_change_stream_reader_spark.storage as storage
 
 spark = get_spark(app_name="aggview-compact-chaos", cpus=4,
                   shuffle_partitions=4)
 
-real_wa = pp._write_atomic
+real_wa = storage.write_atomic
 def wa_hook(dest, body):
     if dest.endswith("_manifest"):  # the swap = the commit point
         print("KILLED_AT manifest-swap", flush=True)
         os.kill(os.getpid(), signal.SIGKILL)
     real_wa(dest, body)
-pp._write_atomic = wa_hook
+storage.write_atomic = wa_hook
 
 av.compact_agg_view_keys(spark, path)
 print("SURVIVED", flush=True)

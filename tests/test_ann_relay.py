@@ -18,6 +18,7 @@ from pymongo_change_stream_reader_spark.operators.similarity import (
     upsert_ivf_index,
     write_ivf_index,
 )
+from pymongo_change_stream_reader_spark.storage import list_files
 
 DIM = 4
 
@@ -95,7 +96,7 @@ def test_upsert_ivf_index_crash_is_atomic_across_deletes(
     write_ivf_index(_snapshot(spark, range(20)), path, nlist=4, train_iters=1)
     q = _snapshot(spark, [0, 3])
     before = _top(spark, path, q)
-    before_files = sim._ann_list_files(path)
+    before_files = list_files(path)
 
     # the fused apply writes the combined tombstones (deletes +
     # collisions) first; crashing at the data-append seam leaves
@@ -116,7 +117,7 @@ def test_upsert_ivf_index_crash_is_atomic_across_deletes(
 
     # the delete of 5 was tombstoned BEFORE the crash — rollback must
     # have restored it along with everything else
-    assert sim._ann_list_files(path) == before_files
+    assert list_files(path) == before_files
     assert not os.path.isdir(path + "_tombstones")
     assert _top(spark, path, q) == before
 
@@ -224,7 +225,7 @@ def test_streaming_ann_index_two_batches_and_replay(spark, tmp_path):
 
     # restart over the same source: epoch markers skip both batches —
     # the index files do not change
-    files_before = sim._ann_list_files(index)
+    files_before = list_files(index)
     q2 = start_composed_relay(
         _stream(), ckpt, ann_index_path=index, ann_vec_col="embedding",
         ann_key_col="vec_key",
@@ -234,7 +235,7 @@ def test_streaming_ann_index_two_batches_and_replay(spark, tmp_path):
     finally:
         q2.stop()
         q2.awaitTermination(30)
-    assert sim._ann_list_files(index) == files_before
+    assert list_files(index) == files_before
     assert _top(spark, index, queries) == _top(spark, rebuilt, queries)
 
 

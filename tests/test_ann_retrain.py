@@ -48,6 +48,7 @@ from pymongo_change_stream_reader_spark.operators.similarity import (
     write_pq_index,
 )
 from pymongo_change_stream_reader_spark.sources.tables import load_table
+from pymongo_change_stream_reader_spark.storage import list_files
 from tests.conftest import SF_SMOKE
 
 
@@ -265,7 +266,7 @@ def test_retrain_crash_mid_swap_recover_table_restores(
             ivf_topk_from_index(spark, path, q, k=5, nprobe=2).collect(),
         )
     )
-    before_files = sim._ann_list_files(path)
+    before_files = list_files(path)
 
     real_rename = os.rename
 
@@ -285,7 +286,7 @@ def test_retrain_crash_mid_swap_recover_table_restores(
     assert os.path.isdir(path + ".compact-tmp")
 
     assert recover_table(path) is True
-    assert sim._ann_list_files(path) == before_files
+    assert list_files(path) == before_files
     after = sorted(
         map(
             tuple,

@@ -31,6 +31,7 @@ from pymongo_change_stream_reader_spark.operators.similarity import (
     write_pq_index,
 )
 from pymongo_change_stream_reader_spark.sources.tables import load_table
+from pymongo_change_stream_reader_spark.storage import list_files
 from tests.conftest import SF_SMOKE
 
 
@@ -217,7 +218,7 @@ def test_ivf_update_crash_between_tombstone_and_data_append(
     path = str(tmp_path / "idx")
     write_ivf_index(emb, path, nlist=8, train_iters=1)
     before = _ivf_top(spark, path, emb)
-    before_files = sim._ann_list_files(path)
+    before_files = list_files(path)
 
     orig = sim._ann_apply_gens
 
@@ -233,9 +234,9 @@ def test_ivf_update_crash_between_tombstone_and_data_append(
 
     # rolled back in-process: no journal, no tombstone sidecar, exact
     # pre-append file listing, identical serving results
-    assert not os.path.exists(sim._ann_journal_path(path))
+    assert not os.path.exists(sim._ann_journal(path).path)
     assert not os.path.isdir(path + "_tombstones")
-    assert sim._ann_list_files(path) == before_files
+    assert list_files(path) == before_files
     assert _ivf_top(spark, path, emb) == before
     # and the batch re-applies cleanly
     append_ivf_index(upd, path, check_new_ids=False)
@@ -250,7 +251,9 @@ def test_ivf_process_death_journal_refuses_then_recovers(
 ):
     """Process-death shape: a live journal with half-applied writes on
     disk.  Writers AND serving reads refuse; recover_ann_append rolls
-    back to the exact pre-append state."""
+    back to the exact pre-append state — also from a journal written
+    by the previous release (one top-level ``<root>_files`` listing
+    per dir, hand-written below)."""
     import pymongo_change_stream_reader_spark.operators.similarity as sim
     from pymongo_change_stream_reader_spark.operators.similarity import (
         recover_ann_append,
@@ -260,28 +263,42 @@ def test_ivf_process_death_journal_refuses_then_recovers(
     write_ivf_index(emb, path, nlist=8, train_iters=1)
     before = _ivf_top(spark, path, emb)
 
-    # simulate: journal written, tombstones landed, data append never did
-    sim._ann_write_journal(path)
-    victims = (
-        spark.read.parquet(path)
-        .filter(F.col("neighbor_id") % 7 == 0)
-        .select("neighbor_id", "gen")
-    )
-    victims.write.mode("append").parquet(path + "_tombstones")
-
-    with pytest.raises(RuntimeError, match="crashed-append journal"):
-        ivf_topk_from_index(
-            spark, path, emb.filter(F.col("vec_id") < 2), k=5
+    for journal_format in ("current", "previous"):
+        # simulate: journal written, tombstones landed, data append
+        # never did
+        if journal_format == "current":
+            sim._ann_journal(path).begin()
+        else:
+            with open(path + ".append_journal.json", "w") as fh:
+                json.dump(
+                    {
+                        "index_files": list_files(path),
+                        "tombstone_files": list_files(path + "_tombstones"),
+                    },
+                    fh,
+                )
+        victims = (
+            spark.read.parquet(path)
+            .filter(F.col("neighbor_id") % 7 == 0)
+            .select("neighbor_id", "gen")
         )
-    with pytest.raises(RuntimeError, match="crashed-append journal"):
-        append_ivf_index(_perturbed(emb).limit(3), path, check_new_ids=False)
-    with pytest.raises(RuntimeError, match="crashed-append journal"):
-        delete_from_ivf_index(emb.limit(1).select("vec_id"), path)
+        victims.write.mode("append").parquet(path + "_tombstones")
 
-    assert recover_ann_append(path) is True
-    assert not os.path.isdir(path + "_tombstones")
-    assert _ivf_top(spark, path, emb) == before
-    assert recover_ann_append(path) is False  # idempotent
+        with pytest.raises(RuntimeError, match="crashed-append journal"):
+            ivf_topk_from_index(
+                spark, path, emb.filter(F.col("vec_id") < 2), k=5
+            )
+        with pytest.raises(RuntimeError, match="crashed-append journal"):
+            append_ivf_index(
+                _perturbed(emb).limit(3), path, check_new_ids=False
+            )
+        with pytest.raises(RuntimeError, match="crashed-append journal"):
+            delete_from_ivf_index(emb.limit(1).select("vec_id"), path)
+
+        assert recover_ann_append(path) is True
+        assert not os.path.isdir(path + "_tombstones")
+        assert _ivf_top(spark, path, emb) == before
+        assert recover_ann_append(path) is False  # idempotent
 
 
 def test_ivf_compact_rolls_back_crashed_append_first(spark, tmp_path, emb):
@@ -294,7 +311,7 @@ def test_ivf_compact_rolls_back_crashed_append_first(spark, tmp_path, emb):
     write_ivf_index(emb, path, nlist=8, train_iters=1)
     before = _ivf_top(spark, path, emb)
 
-    sim._ann_write_journal(path)
+    sim._ann_journal(path).begin()
     # half-applied crash state: tombstones with no replacement data
     (
         spark.read.parquet(path)
@@ -305,7 +322,7 @@ def test_ivf_compact_rolls_back_crashed_append_first(spark, tmp_path, emb):
     )
     compact_ivf_index(spark, path)
     # crashed half-update rolled back, NOT baked into the rewrite
-    assert not os.path.exists(sim._ann_journal_path(path))
+    assert not os.path.exists(sim._ann_journal(path).path)
     assert spark.read.parquet(path).count() == emb.count()
     assert _ivf_top(spark, path, emb) == before
 
@@ -316,7 +333,7 @@ def test_pq_delete_crash_rolls_back(spark, tmp_path, emb, monkeypatch):
     path = str(tmp_path / "idx")
     write_pq_index(emb, path, m_sub=8, k_codes=16, iters=1)
     before = _pq_top(spark, path, emb, emb)
-    before_files = sim._ann_list_files(path)
+    before_files = list_files(path)
 
     orig = sim._ann_delete
 
@@ -331,9 +348,9 @@ def test_pq_delete_crash_rolls_back(spark, tmp_path, emb, monkeypatch):
         )
     monkeypatch.undo()
 
-    assert not os.path.exists(sim._ann_journal_path(path))
+    assert not os.path.exists(sim._ann_journal(path).path)
     assert not os.path.isdir(path + "_tombstones")
-    assert sim._ann_list_files(path) == before_files
+    assert list_files(path) == before_files
     assert _pq_top(spark, path, emb, emb) == before
 
 

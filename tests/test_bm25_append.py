@@ -7,6 +7,7 @@ consumer folds micro-batches with replay protection."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +18,7 @@ from pymongo_change_stream_reader_spark.operators.retrieval import (
     write_bm25_index,
 )
 from pymongo_change_stream_reader_spark.sources.tables import load_table
+from pymongo_change_stream_reader_spark.storage import list_files
 from tests.conftest import SF_SMOKE
 
 
@@ -110,11 +112,11 @@ def test_fused_append_files_and_crash_rollback(spark, tmp_path, docs):
     write_bm25_index(a, path)
     consts = json.load(open(os.path.join(path, "_consts.json")))
     assert consts["id_type"] == "bigint"
-    before_files = set(rt._list_table_files(path, "postings"))
+    before_files = set(list_files(os.path.join(path, "postings")))
     assert append_bm25_index(b, path) == b.count()
     new_files = {
         f
-        for f in set(rt._list_table_files(path, "postings")) - before_files
+        for f in set(list_files(os.path.join(path, "postings"))) - before_files
         if f.endswith(".parquet")
     }
     assert new_files, "fused append wrote no postings files"
@@ -131,7 +133,7 @@ def test_fused_append_files_and_crash_rollback(spark, tmp_path, docs):
     c = spark.createDataFrame(
         [(10_000, "wholly new fused crash doc")], "doc_id long, text string"
     )
-    pre = {t: set(rt._list_table_files(path, t)) for t in rt._BM25_TABLES}
+    pre = {t: set(list_files(os.path.join(path, t))) for t in rt._BM25_TABLES}
     pre_consts = json.load(open(os.path.join(path, "_consts.json")))
     real = rt._write_consts
     import pytest as _pytest
@@ -147,7 +149,7 @@ def test_fused_append_files_and_crash_rollback(spark, tmp_path, docs):
         rt._write_consts = real
     assert rt.recover_bm25_append(path) is True
     assert {
-        t: set(rt._list_table_files(path, t)) for t in rt._BM25_TABLES
+        t: set(list_files(os.path.join(path, t))) for t in rt._BM25_TABLES
     } == pre
     assert not os.path.exists(os.path.join(path, rt._BM25_FUSED_TMP))
     assert json.load(open(os.path.join(path, "_consts.json"))) == pre_consts

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,6 +31,7 @@ from pymongo_change_stream_reader_spark.operators.retrieval import (
     write_bm25_index,
 )
 from pymongo_change_stream_reader_spark.sources.tables import load_table
+from pymongo_change_stream_reader_spark.storage import list_files
 from tests.conftest import SF_SMOKE
 
 
@@ -161,15 +163,22 @@ def test_crash_mid_apply_rolls_back_exactly(
     """A crash after the data appends but before the consts write
     leaves the journal; recovery restores the exact pre-apply state
     (tombstone files included) and the replayed batch then applies to
-    the same result as an uncrashed run."""
+    the same result as an uncrashed run.  A journal written by the
+    previous release (hand-written below in its on-disk format) rolls
+    back the same way.  So does an apply that crashes AFTER its consts
+    write followed by a recovery that crashes before restoring them:
+    the journal must survive that recovery, so a second one still
+    returns the pre-apply consts."""
     import pymongo_change_stream_reader_spark.operators.retrieval as rt
 
     path = str(tmp_path / "idx")
     write_bm25_index(docs, path)
     pre_files = {
-        t: rt._list_table_files(path, t) for t in rt._BM25_TABLES
+        t: list_files(os.path.join(path, t)) for t in rt._BM25_TABLES
     }
     pre_consts = _consts(path)
+    with open(os.path.join(path, "_consts.json")) as fh:
+        pre_consts_file = json.load(fh)
     updated = _final_corpus(spark, docs).filter(F.col("doc_id") % 7 == 0)
 
     real = rt._write_consts
@@ -177,23 +186,70 @@ def test_crash_mid_apply_rolls_back_exactly(
     def boom(*a, **kw):
         raise RuntimeError("injected crash before consts write")
 
-    monkeypatch.setattr(rt, "_write_consts", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        upsert_bm25_index(updated, path)
-    monkeypatch.setattr(rt, "_write_consts", real)
-    # journal is live: further writes refuse
-    with pytest.raises(RuntimeError, match="crashed-append journal"):
-        upsert_bm25_index(updated, path)
-    assert recover_bm25_append(path)
-    assert {
-        t: rt._list_table_files(path, t) for t in rt._BM25_TABLES
-    } == pre_files
-    assert _consts(path) == pre_consts
+    def write_then_boom(*a, **kw):
+        real(*a, **kw)
+        raise RuntimeError("injected crash after consts write")
+
+    for case in ("current", "previous", "crashed recovery"):
+        monkeypatch.setattr(
+            rt,
+            "_write_consts",
+            write_then_boom if case == "crashed recovery" else boom,
+        )
+        with pytest.raises(RuntimeError, match="injected crash"):
+            upsert_bm25_index(updated, path)
+        monkeypatch.setattr(rt, "_write_consts", real)
+        if case == "crashed recovery":
+            assert _consts(path) != pre_consts
+            monkeypatch.setattr(rt, "_write_consts", boom)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                recover_bm25_append(path)
+            monkeypatch.setattr(rt, "_write_consts", real)
+        if case == "previous":
+            with open(os.path.join(path, "_append_journal.json"), "w") as fh:
+                json.dump(
+                    {
+                        "files": pre_files,
+                        "consts": {
+                            k: pre_consts_file[k]
+                            for k in ("n_docs", "total_len", "id_type")
+                        },
+                    },
+                    fh,
+                )
+        # journal is live: further writes refuse
+        with pytest.raises(RuntimeError, match="crashed-append journal"):
+            upsert_bm25_index(updated, path)
+        assert recover_bm25_append(path)
+        assert {
+            t: list_files(os.path.join(path, t)) for t in rt._BM25_TABLES
+        } == pre_files
+        assert _consts(path) == pre_consts
     # the replay now applies cleanly and equals the rebuild
     upsert_bm25_index(updated, path)
     full = str(tmp_path / "full")
     write_bm25_index(_final_corpus(spark, docs), full)
     assert _scores(spark, full) == _scores(spark, path)
+
+
+def test_recover_waits_for_a_held_index_lock(spark, tmp_path, docs):
+    """recover_bm25_append takes the index write lock: a recovery run
+    while a relay is mid-apply would otherwise delete that apply's
+    files and journal.  A cross-process lock holder must delay it."""
+    from tests.test_bucketed_sink_crash import _hold_lock
+
+    path = str(tmp_path / "idx")
+    write_bm25_index(docs, path)
+    hold_s = 1.5
+    holder = _hold_lock(os.path.join(path, "_write.lock"), hold_s)
+    t0 = time.monotonic()
+    assert recover_bm25_append(path) is False
+    elapsed = time.monotonic() - t0
+    holder.wait()
+    assert elapsed >= hold_s * 0.8, (
+        f"recover_bm25_append returned in {elapsed:.2f}s while the index "
+        f"write lock was held for {hold_s}s — it is not taking bm25_lock"
+    )
 
 
 def test_compact_over_crashed_journal_recovers_first(

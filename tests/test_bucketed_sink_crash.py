@@ -28,9 +28,11 @@ import pytest
 
 from pymongo_change_stream_reader_spark.plans.pipeline import (
     PipelineError,
-    _bucket_history_files,
-    read_bucketed_sink,
     translate_pipeline,
+)
+from pymongo_change_stream_reader_spark.storage import (
+    bucket_history_files,
+    read_bucketed_sink,
     vacuum_bucketed_sink,
 )
 
@@ -51,7 +53,7 @@ def _write_phantom(path: str) -> str:
     """Simulate a crash between the history write and the manifest
     swap: a fully-written history snapshot (pointing at a real v-dir)
     that never became _manifest."""
-    hist = _bucket_history_files(path)
+    hist = bucket_history_files(path)
     n = max(int(h.rsplit("v-", 1)[1]) for h in hist) + 1
     vdir = f"v-{n:06d}"
     # the phantom's data dir exists (the commit wrote it before the
@@ -103,7 +105,7 @@ def test_first_commit_crash_sink_nonexistent_all_versions(spark, tmp_path):
     assert "_manifest.h-v-000001" not in os.listdir(path)
     assert _vals(read_bucketed_sink(spark, path)) == [(1, "c1")]
     # the phantom occupied v-000001, so its number was not recycled
-    assert _bucket_history_files(path) == ["_manifest.h-v-000002"]
+    assert bucket_history_files(path) == ["_manifest.h-v-000002"]
 
 
 def test_tampered_history_with_no_matching_anchor_not_purged(
@@ -115,13 +117,13 @@ def test_tampered_history_with_no_matching_anchor_not_purged(
     _merge(spark, [(1, "c1")], path)
     _merge(spark, [(1, "c2")], path)
     # tamper: rewrite the newest (current) snapshot so nothing matches
-    hist = _bucket_history_files(path)
+    hist = bucket_history_files(path)
     with open(os.path.join(path, hist[-1]), "w") as fh:
         fh.write("buckets=4")
-    before = set(_bucket_history_files(path))
+    before = set(bucket_history_files(path))
     _merge(spark, [(1, "c3")], path)
     # both pre-existing snapshots survive; only the new one was added
-    assert before <= set(_bucket_history_files(path))
+    assert before <= set(bucket_history_files(path))
 
 
 def test_gc_watermark_preserves_inflight_collects_orphans(spark, tmp_path):
@@ -215,7 +217,7 @@ def test_vacuum_purges_phantom_instead_of_anchor(spark, tmp_path):
     names = os.listdir(path)
     assert phantom not in names
     # the anchor (c2's snapshot) survives; only c1's was vacuumed
-    assert _bucket_history_files(path) == ["_manifest.h-v-000002"]
+    assert bucket_history_files(path) == ["_manifest.h-v-000002"]
     assert _vals(read_bucketed_sink(spark, path)) == [(1, "c2")]
     # next commit: version=-1 resolves to c2, never the phantom
     _merge(spark, [(1, "c3")], path)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pymongo_change_stream_reader_spark.sources.change_events import (
     stream_change_events_json,
 )
+from pymongo_change_stream_reader_spark.storage import list_files
 from pymongo_change_stream_reader_spark.streaming.composed_relay import (
     composed_apply_batch,
     start_composed_relay,
@@ -162,13 +163,13 @@ def test_partial_crash_replays_only_missing_stores(spark, tmp_path):
                    "erregistry": "disabled"}
     # simulate the partial crash on epoch 1: pre-commit ONLY dedup's
     # marker, then run the "replay"
-    from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
-        _commit_epoch,
-        _query_id,
+    from pymongo_change_stream_reader_spark.storage import (
+        commit_epoch,
+        query_id,
     )
 
-    qid = _query_id(p["checkpoint_dir"])
-    _commit_epoch(
+    qid = query_id(p["checkpoint_dir"])
+    commit_epoch(
         os.path.join(p["checkpoint_dir"], "dedup_epoch_log"), 1, qid
     )
     batch1 = _mk(spark, [("insert", "k9", LONG_A, 2, 1, "a2")])
@@ -226,14 +227,14 @@ def test_store_timings_accumulate_across_batches(spark, tmp_path):
     # every store's epoch-2 marker pre-committed, the replay skips all
     # of them yet the dedup/bm25 timings still advance (the probe runs
     # inside _timed — r8 ADVICE low)
-    from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
-        _commit_epoch,
-        _query_id,
+    from pymongo_change_stream_reader_spark.storage import (
+        commit_epoch,
+        query_id,
     )
 
-    qid = _query_id(p["checkpoint_dir"])
+    qid = query_id(p["checkpoint_dir"])
     for store in ("dedup", "bm25"):
-        _commit_epoch(
+        commit_epoch(
             os.path.join(p["checkpoint_dir"], f"{store}_epoch_log"), 2, qid
         )
     second = dict(timings)
@@ -362,14 +363,14 @@ def test_composed_relay_with_ann_store(spark, tmp_path):
 
     # partial crash: ANN's epoch-1 marker committed, nothing else —
     # the replay applies every store EXCEPT ann
-    from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
-        _commit_epoch,
-        _query_id,
+    from pymongo_change_stream_reader_spark.storage import (
+        commit_epoch,
+        query_id,
     )
 
-    qid = _query_id(p["checkpoint_dir"])
-    _commit_epoch(os.path.join(p["checkpoint_dir"], "ann_epoch_log"), 1, qid)
-    files_before = sim._ann_list_files(p["ann_index_path"])
+    qid = query_id(p["checkpoint_dir"])
+    commit_epoch(os.path.join(p["checkpoint_dir"], "ann_epoch_log"), 1, qid)
+    files_before = list_files(p["ann_index_path"])
     batch1 = _mk([("insert", "21", LONG_B, _vec(21), 2, 1, "a4")])
     out = composed_apply_batch(batch1, 1, ann_key_col="vec_key", **p)
     assert out == {"replica": "applied", "dedup": "applied",
@@ -377,7 +378,7 @@ def test_composed_relay_with_ann_store(spark, tmp_path):
                    "aggview": "disabled",
                    "joinview": "disabled", "starview": "disabled",
                    "erregistry": "disabled"}
-    assert sim._ann_list_files(p["ann_index_path"]) == files_before
+    assert list_files(p["ann_index_path"]) == files_before
     # the other stores DID apply batch 1
     assert "21" in {
         r["key"] for r in read_replica(spark, p["replica_path"]).collect()

@@ -84,7 +84,7 @@ def die(store):
     print("KILLED_AFTER " + store, flush=True)
     os.kill(os.getpid(), signal.SIGKILL)
 
-real_commit = cr._commit_epoch
+real_commit = cr.commit_epoch
 def commit_then_die(marker_dir, epoch_id, qid):
     real_commit(marker_dir, epoch_id, qid)
     store = os.path.basename(marker_dir).split("_")[0]
@@ -92,7 +92,7 @@ def commit_then_die(marker_dir, epoch_id, qid):
     # other stores are mid-apply (appends in flight, journals live)
     if store == kill_after or kill_after == "parallel-midflight":
         die(store)
-cr._commit_epoch = commit_then_die
+cr.commit_epoch = commit_then_die
 
 if kill_after == "replica":
     real_mat = cr.materialize_change_batch

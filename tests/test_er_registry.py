@@ -302,14 +302,14 @@ def die(tag):
     print("KILLED_AT " + tag, flush=True)
     os.kill(os.getpid(), signal.SIGKILL)
 
-import pymongo_change_stream_reader_spark.plans.pipeline as pp
+import pymongo_change_stream_reader_spark.storage as storage
 
 if kill_mode == "after-deltas":
     # deltas persisted, NOTHING committed (the fused commit is the
     # whole store wave)
     def cbf_hook(*a, **kw):
         die("after-deltas")
-    er._commit_bucketed_fused = cbf_hook
+    er.commit_bucketed_fused = cbf_hook
 elif kill_mode == "after-records":
     # records store committed, keys store not: the persisted key
     # tombstones must still land on replay (a recompute against the
@@ -317,19 +317,19 @@ elif kill_mode == "after-records":
     # fused commit: data lands in one write, manifest finalizes run
     # sequentially in spec order (records, keys, members, view) —
     # dying at the keys finalize leaves records committed, keys not.
-    real_fin = pp._finalize_bucketed_version
+    real_fin = storage.finalize_bucketed_version
     def fin_hook(path, *a, **kw):
         if path.endswith("keys"):
             die("after-records")
         return real_fin(path, *a, **kw)
-    pp._finalize_bucketed_version = fin_hook
+    storage.finalize_bucketed_version = fin_hook
 else:
-    real_wa = er._write_atomic
+    real_wa = storage.write_atomic
     def wa_hook(dest, body):
         if dest.endswith("_current"):
             die("before-pointer")
         real_wa(dest, body)
-    er._write_atomic = wa_hook
+    storage.write_atomic = wa_hook
 
 FIELDS = [MatchField("name", 0.6, sim_edit_distance),
           MatchField("city", 0.2, sim_edit_distance),
@@ -350,7 +350,7 @@ print("SURVIVED", flush=True)
     "kill_mode", ["after-deltas", "after-records", "before-pointer"]
 )
 def test_sigkill_windows_converge(spark, tmp_path, kill_mode):
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
     )
 
@@ -795,7 +795,7 @@ def die(tag):
     print("KILLED_AT " + tag, flush=True)
     os.kill(os.getpid(), signal.SIGKILL)
 
-real_cb = er._commit_bucketed
+real_cb = er.commit_bucketed
 done = []
 def cb_hook(df, store, *a, **kw):
     # torn-rebuild window: three stores committed, the view (the
@@ -809,7 +809,7 @@ def cb_hook(df, store, *a, **kw):
     res = real_cb(df, store, *a, **kw)
     done.append(store)
     return res
-er._commit_bucketed = cb_hook
+er.commit_bucketed = cb_hook
 
 FIELDS = [MatchField("name", 0.6, sim_edit_distance),
           MatchField("city", 0.2, sim_edit_distance),

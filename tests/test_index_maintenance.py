@@ -17,6 +17,7 @@ from pymongo_change_stream_reader_spark.operators.maintenance import (
     recover_table,
 )
 from pymongo_change_stream_reader_spark.sources.tables import load_table
+from pymongo_change_stream_reader_spark.storage import list_files
 from tests.conftest import SF_SMOKE
 
 
@@ -159,7 +160,7 @@ def test_bm25_append_crash_journal_rollback(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "bm25")
     R.write_bm25_index(a, path)
     pre_files = {
-        t: R._list_table_files(path, t)
+        t: list_files(os.path.join(path, t))
         for t in ("postings", "doclen", "dfreq")
     }
 
@@ -185,7 +186,7 @@ def test_bm25_append_crash_journal_rollback(spark, tmp_path, monkeypatch):
     assert R.recover_bm25_append(path) is True
     # exact pre-append state restored, staging dir cleared
     for t in ("postings", "doclen", "dfreq"):
-        assert R._list_table_files(path, t) == pre_files[t]
+        assert list_files(os.path.join(path, t)) == pre_files[t]
     assert not os.path.exists(os.path.join(path, R._BM25_FUSED_TMP))
 
     # WINDOW 2: crash after the FIRST staged file moved into its table
@@ -206,7 +207,7 @@ def test_bm25_append_crash_journal_rollback(spark, tmp_path, monkeypatch):
     monkeypatch.setattr("os.rename", real_rename)
     assert R.recover_bm25_append(path) is True
     for t in ("postings", "doclen", "dfreq"):
-        assert R._list_table_files(path, t) == pre_files[t]
+        assert list_files(os.path.join(path, t)) == pre_files[t]
     assert not os.path.exists(os.path.join(path, R._BM25_FUSED_TMP))
     # replay applies cleanly and matches a from-scratch build
     assert R.append_bm25_index(b, path) == b.count()

@@ -256,7 +256,7 @@ def test_join_view_validation(spark, tmp_path):
 
 
 def test_compact_join_view_purges_and_preserves(spark, tmp_path):
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
     )
     from pymongo_change_stream_reader_spark.streaming.join_view import (

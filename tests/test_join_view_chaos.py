@@ -66,7 +66,7 @@ JOIN_TYPE = sys.argv[5] if len(sys.argv) > 5 else "inner"
 
 from pymongo_change_stream_reader_spark.session import get_spark
 import pymongo_change_stream_reader_spark.streaming.join_view as jv
-import pymongo_change_stream_reader_spark.plans.pipeline as pp
+import pymongo_change_stream_reader_spark.storage as storage
 
 spark = get_spark(app_name="joinview-chaos", cpus=4, shuffle_partitions=4)
 
@@ -79,20 +79,20 @@ if kill_mode == "before-stores":
         # the fused commit = the whole store wave; the view deltas
         # dir rename already happened, nothing committed
         die("before-stores")
-    jv._commit_bucketed_fused = cb_hook
+    jv.commit_bucketed_fused = cb_hook
 elif kill_mode == "after-facts":
     # r14 fused commit: the store DATA lands in one write, then the
     # per-store manifest finalizes run SEQUENTIALLY in spec order
     # (facts, dims, fact_by_fk, view) — dying at the fact_by_fk
     # finalize leaves facts (and dims) committed, the index not
-    real_fin = pp._finalize_bucketed_version
+    real_fin = storage.finalize_bucketed_version
     def fin_hook(path, *a, **kw):
         if path.endswith("fact_by_fk"):
             die("after-facts")
         return real_fin(path, *a, **kw)
-    pp._finalize_bucketed_version = fin_hook
+    storage.finalize_bucketed_version = fin_hook
 else:
-    real_wa = jv._write_atomic
+    real_wa = storage.write_atomic
     def wa_hook(dest, body):
         if dest.endswith("_current"):
             if kill_mode == "before-pointer":
@@ -100,7 +100,7 @@ else:
             real_wa(dest, body)
             die("after-pointer")
         real_wa(dest, body)
-    jv._write_atomic = wa_hook
+    storage.write_atomic = wa_hook
 
 batch = spark.createDataFrame(ROWS, SCHEMA).selectExpr(
     "operationType", "documentKey", "fullDocument",

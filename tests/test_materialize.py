@@ -92,7 +92,7 @@ def test_materialize_stale_replay_is_noop(spark, tmp_path):
 
 
 def test_materialize_tombstones_purge_on_compaction(spark, tmp_path):
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
     )
     from pymongo_change_stream_reader_spark.streaming.materialize import (
@@ -224,7 +224,7 @@ def test_compact_replica_preserves_state_and_shrinks_files(spark, tmp_path):
     prev = {
         r["key"]: _json.loads(r["doc"])["v"]
         for r in __import__(
-            "pymongo_change_stream_reader_spark.plans.pipeline",
+            "pymongo_change_stream_reader_spark.storage",
             fromlist=["read_bucketed_sink"],
         ).read_bucketed_sink(spark, path, -1).collect()
     }
@@ -476,7 +476,7 @@ def test_replica_time_travel_with_retain(spark, tmp_path):
     """retain=3 on the materializer: each micro-batch commit stays
     readable 3 deep — the replica-side face of the bucketed-sink
     history (r4)."""
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
     )
     from pymongo_change_stream_reader_spark.streaming.materialize import (

@@ -4188,7 +4188,7 @@ def test_bucketed_manifest_corruption_raises(spark, tmp_path):
 def test_merge_bucketed_time_travel_retain(spark, tmp_path):
     """retain=3: the three newest commits stay readable via version
     0/-1/-2; -3 is outside the window and says so."""
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
     )
 
@@ -4213,7 +4213,7 @@ def test_merge_bucketed_vacuum_under_concurrent_reader(spark, tmp_path):
     vacuumed version raises rather than reading stale dirs."""
     import os
 
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
         vacuum_bucketed_sink,
     )
@@ -4244,12 +4244,12 @@ def test_merge_bucketed_vacuum_under_concurrent_reader(spark, tmp_path):
 
 
 def test_bucketed_prev_manifest_corrupt_shares_validation(spark, tmp_path):
-    """ADVICE r3: version=-1 must go through _read_bucket_manifest so a
+    """ADVICE r3: version=-1 must go through read_bucket_manifest so a
     truncated/corrupt snapshot raises the documented PipelineError, not
     a raw ValueError."""
     import os
 
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
     )
 
@@ -4270,7 +4270,7 @@ def test_bucketed_legacy_prev_fallback(spark, tmp_path):
     _manifest + _manifest.prev on disk) still answers version=-1."""
     import os
 
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
     )
 
@@ -4318,6 +4318,8 @@ def test_vacuum_refuses_whole_table_sink(spark, tmp_path):
 
     from pymongo_change_stream_reader_spark.plans.pipeline import (
         read_versioned_sink,
+    )
+    from pymongo_change_stream_reader_spark.storage import (
         vacuum_bucketed_sink,
     )
 
@@ -4334,7 +4336,7 @@ def test_merge_bucketed_invalid_retain_leaves_sink_untouched(spark, tmp_path):
     mutation — a failed merge cannot half-install a commit."""
     import os
 
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
     )
 
@@ -4358,7 +4360,7 @@ def test_merge_bucketed_version_numbers_never_recycle(spark, tmp_path):
     travel."""
     import os
 
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
     )
 
@@ -4388,7 +4390,7 @@ def test_bucketed_history_ignores_tmp_and_retain_one(spark, tmp_path):
     commit (no _manifest.prev resurrection of version -1)."""
     import os
 
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
+    from pymongo_change_stream_reader_spark.storage import (
         read_bucketed_sink,
     )
 
@@ -4412,8 +4414,8 @@ def test_bucketed_history_ignores_tmp_and_retain_one(spark, tmp_path):
 def test_bucketed_history_numeric_order_beyond_padding(spark, tmp_path):
     """Review r4: history ordering is numeric, so version numbers past
     the 6-digit zero-padding (v-1000000) still sort after v-999999."""
-    from pymongo_change_stream_reader_spark.plans.pipeline import (
-        _bucket_history_files,
+    from pymongo_change_stream_reader_spark.storage import (
+        bucket_history_files,
     )
     import os
 
@@ -4422,7 +4424,7 @@ def test_bucketed_history_numeric_order_beyond_padding(spark, tmp_path):
     for n in ("000002", "999999", "1000000", "1000001"):
         with open(os.path.join(path, f"_manifest.h-v-{n}"), "w") as fh:
             fh.write("buckets=2")
-    assert _bucket_history_files(path) == [
+    assert bucket_history_files(path) == [
         "_manifest.h-v-000002",
         "_manifest.h-v-999999",
         "_manifest.h-v-1000000",

@@ -60,6 +60,7 @@ ROWS = [tuple(r) for r in json.loads(sys.argv[3])]
 SCHEMA = sys.argv[4]
 
 from pymongo_change_stream_reader_spark.session import get_spark
+import pymongo_change_stream_reader_spark.storage as storage
 import pymongo_change_stream_reader_spark.streaming.star_view as sv
 
 spark = get_spark(app_name="starview-chaos", cpus=4, shuffle_partitions=4)
@@ -73,20 +74,19 @@ if kill_mode == "after-facts":
     # finalizes run SEQUENTIALLY in spec order (facts, dims_a, idx_a,
     # ...) — dying at the idx_a finalize leaves facts committed, the
     # a-side index not
-    import pymongo_change_stream_reader_spark.plans.pipeline as pp
-    real_fin = pp._finalize_bucketed_version
+    real_fin = storage.finalize_bucketed_version
     def fin_hook(path, *a, **kw):
         if path.endswith("idx_a"):
             die("after-facts")
         return real_fin(path, *a, **kw)
-    pp._finalize_bucketed_version = fin_hook
+    storage.finalize_bucketed_version = fin_hook
 else:
-    real_wa = sv._write_atomic
+    real_wa = storage.write_atomic
     def wa_hook(dest, body):
         if dest.endswith("_current"):
             die("before-pointer")
         real_wa(dest, body)
-    sv._write_atomic = wa_hook
+    storage.write_atomic = wa_hook
 
 batch = spark.createDataFrame(ROWS, SCHEMA).selectExpr(
     "operationType", "documentKey", "fullDocument",

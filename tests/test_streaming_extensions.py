@@ -349,9 +349,9 @@ def test_kafka_epoch_guard_skips_replay(tmp_path, spark):
     proving the guard is what suppressed the write."""
     import pytest as _pytest
 
+    from pymongo_change_stream_reader_spark.storage import commit_epoch
     from pymongo_change_stream_reader_spark.streaming.job import RelaySettings
     from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
-        _commit_epoch,
         foreach_batch_kafka_with_topics,
     )
 
@@ -361,7 +361,7 @@ def test_kafka_epoch_guard_skips_replay(tmp_path, spark):
     import os
 
     marker_dir = os.path.join(settings.checkpoint_location, "epoch_log")
-    _commit_epoch(marker_dir, 7)
+    commit_epoch(marker_dir, 7)
     batch = spark.createDataFrame(
         [("t.a", "k", "v")], "topic STRING, key STRING, value STRING"
     )

@@ -22,8 +22,10 @@ def main() -> None:
 
     from pymongo_change_stream_reader_spark.session import get_spark
     from pymongo_change_stream_reader_spark.streaming.join_view import (
-        _merge_lww,
         join_view_batch,
+    )
+    from pymongo_change_stream_reader_spark.streaming.materialize import (
+        merge_lww,
     )
 
     spark = get_spark(app_name="capture_merge_plan", cpus=4,
@@ -51,7 +53,7 @@ def main() -> None:
         "key STRING, live BOOLEAN, fk STRING, doc STRING, "
         "__t INT, __i INT, __d STRING",
     )
-    merged, _old, _entries, _changed = _merge_lww(
+    merged, _old, _entries, _changed = merge_lww(
         spark, winners, os.path.join(path, "facts"), ["key"], ["key"],
         4, changed=list(range(4)), schema=winners.schema,
     )
