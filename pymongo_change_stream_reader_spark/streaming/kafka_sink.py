@@ -16,9 +16,12 @@ the Spark-side plumbing real and testable.
 from __future__ import annotations
 
 import logging
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from pymongo_change_stream_reader_spark.storage import (
     commit_epoch,
@@ -30,6 +33,11 @@ from pymongo_change_stream_reader_spark.storage import (
 )
 
 logger = logging.getLogger(__name__)
+
+# Spark's partition dir prefix of the demux column, and the dir value
+# it writes for a null (or empty) topic.
+_TOPIC_DIR = "topic="
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 # Process-wide cache of topics known to exist (mirrors the reference's
 # ChangeEventHandler._created_topics, change_event_handler.py:29,38-42).
@@ -99,9 +107,9 @@ def foreach_batch_kafka_with_topics(
     below closes even that (its rename IS the marker).
 
     Scale: the distinct-topic collect is bounded by collection count,
-    not row count; the write itself stays fully distributed."""
-    import os
-
+    not row count; the write itself stays fully distributed.  That
+    collect is also the batch's emptiness test: a batch without topics
+    returns before any produce or marker."""
     require_local_path(settings.checkpoint_location, "checkpoint_location")
     marker_dir = os.path.join(settings.checkpoint_location, "epoch_log")
 
@@ -110,9 +118,9 @@ def foreach_batch_kafka_with_topics(
         if epoch_committed(marker_dir, epoch_id, qid):
             logger.info("epoch %s already produced; skipping replay", epoch_id)
             return
-        if batch.isEmpty():  # nothing to produce, nothing to mark
-            return
         topics = {r["topic"] for r in batch.select("topic").distinct().collect()}
+        if not topics:  # an empty batch: nothing to produce, nothing to mark
+            return
         _ensure_topics(bootstrap_servers, topics, settings)
         (
             batch.selectExpr(
@@ -135,20 +143,20 @@ def foreach_batch_parquet_demux(
     tests/test_file_writer/): one parquet partition per topic,
     EXACTLY-ONCE under replay within a checkpoint lifetime.
 
-    Each epoch writes to a staging dir, then a single atomic rename
-    publishes the epoch — the rename is both the commit point and
-    the replay marker, so no crash point can double-write: before the
-    rename a replay overwrites the staging dir; after it, the replay
-    sees the published epoch and skips.  Pass ``checkpoint_location``
-    so epochs are scoped by the streaming query id: epoch ids are
-    only unique per checkpoint, and without the scope a NEW query
-    (checkpoint lost/reset) would silently SKIP batches that collide
-    with old epoch numbers — at-most-once loss.  With it, checkpoint
-    loss re-delivers (honest at-least-once across that boundary).
-    Readers union every published epoch dir."""
-    import os
-    import shutil
-
+    Each epoch writes to a ``<epoch>.staging`` dir, then a single
+    atomic rename publishes the epoch — the rename is both the commit
+    point and the replay marker, so no crash point can double-write:
+    before the rename a replay overwrites the staging dir; after it,
+    the replay sees the published epoch and skips.  The write is the
+    epoch's one Spark job: a zero-row batch leaves a staging dir with
+    no ``topic=`` dir, which is removed instead of published.  Pass
+    ``checkpoint_location`` so epochs are scoped by the streaming
+    query id: epoch ids are only unique per checkpoint, and without
+    the scope a NEW query (checkpoint lost/reset) would silently SKIP
+    batches that collide with old epoch numbers — at-most-once loss.
+    With it, checkpoint loss re-delivers (honest at-least-once across
+    that boundary).  ``read_parquet_demux`` reads every published
+    epoch in one scan."""
     require_local_path(out_dir, "demux out_dir")
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -156,41 +164,48 @@ def foreach_batch_parquet_demux(
         if os.path.exists(final):
             logger.info("epoch %s already published; skipping replay", epoch_id)
             return
-        if batch.isEmpty():
-            # a zero-row epoch has nothing to publish — and a
-            # partitionBy write of 0 rows would leave a parquet-less
-            # dir that poisons the union read
-            return
         staging = final + ".staging"
         if os.path.exists(staging):  # crash leftover from a prior try
             shutil.rmtree(staging)
         batch.write.mode("overwrite").partitionBy("topic").parquet(staging)
-        os.rename(staging, final)
+        if any(d.startswith(_TOPIC_DIR) for d in os.listdir(staging)):
+            os.rename(staging, final)
+        else:  # zero rows: the write left only _SUCCESS, nothing to publish
+            shutil.rmtree(staging)
 
     return write_batch
 
 
-def read_parquet_demux(spark, out_dir: str):
-    """Read every PUBLISHED epoch of a parquet-demux sink (staging
-    dirs are invisible by construction).  Each epoch dir is its own
-    partitioned root, so epochs are read individually and unioned —
-    a single glob read would make Spark's partition discovery treat
-    ``epoch-*`` as conflicting table roots."""
-    import os
-    from functools import reduce
+def read_parquet_demux(spark, out_dir: str) -> DataFrame:
+    """Every PUBLISHED epoch of a parquet-demux sink as one scan:
+    columns are the written ones, then ``topic`` (STRING).
 
-    epochs = sorted(
-        d
-        for d in os.listdir(out_dir)
-        if d.startswith("epoch-") and not d.endswith(".staging")
-    )
-    frames = [
-        spark.read.parquet(os.path.join(out_dir, e))
-        for e in epochs
-        # an epoch published from an empty batch (or a _SUCCESS-only
-        # dir) must not poison the union with schema inference errors
-        if dir_has_parquet(os.path.join(out_dir, e))
-    ]
-    if not frames:
+    The driver lists the published ``epoch-*`` dirs (staging dirs are
+    excluded by name) and hands them all to one recursive file read,
+    so the read's Spark jobs do not grow with the epoch count.  A
+    recursive read infers no partition column, so ``topic`` comes back
+    from each file's ``topic=<escaped>`` dir: the driver maps each
+    listed dir name, as the file path column spells it (URI-encoded on
+    top of Spark's path escaping), to Spark's unescaped value."""
+    epochs, names = [], set()
+    for e in sorted(os.listdir(out_dir)):
+        path = os.path.join(out_dir, e)
+        published = e.startswith("epoch-") and not e.endswith(".staging")
+        if published and dir_has_parquet(path):
+            epochs.append(path)
+            names.update(d for d in os.listdir(path) if d.startswith(_TOPIC_DIR))
+    if not epochs:
         raise FileNotFoundError(f"no published epochs under {out_dir}")
-    return reduce(lambda a, b: a.unionByName(b), frames)
+    jvm = spark._jvm
+    catalog_utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    topic_of = {}
+    for d in names:
+        value = d[len(_TOPIC_DIR):]
+        spelled = jvm.org.apache.hadoop.fs.Path("/" + d).toUri().getRawPath()[1:]
+        topic_of[spelled] = (
+            None if value == _NULL_PARTITION else catalog_utils.unescapePathName(value)
+        )
+    lookup = F.create_map(*(F.lit(x) for kv in topic_of.items() for x in kv))
+    dir_name = F.regexp_extract(F.col("_metadata.file_path"), r"/([^/]*)/[^/]*$", 1)
+    df = spark.read.option("recursiveFileLookup", "true").parquet(*epochs)
+    return df.withColumn("topic", lookup[dir_name].cast("string"))

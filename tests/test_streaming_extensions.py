@@ -5,6 +5,7 @@ token-dedup analog), and the foreachBatch topic-creation cache."""
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -501,6 +502,139 @@ def test_demux_multi_topic_mid_batch_crash_no_partial_topic(
     # and a further replay of the published epoch is a no-op
     write(batch, 0)
     assert read_parquet_demux(spark, out).count() == 4
+
+
+def test_demux_read_jobs_do_not_grow_with_epochs(spark, tmp_path):
+    """The reader scans every published epoch at once: its Spark job
+    count is the same over 40 and 400 epochs, and the rows scale."""
+    import shutil as _shutil
+
+    from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
+        foreach_batch_parquet_demux,
+        read_parquet_demux,
+    )
+
+    seed = str(tmp_path / "seed")
+    batch = spark.createDataFrame(
+        [("t.a", "k1", "v1"), ("t.b", "k2", "v2"), ("t.b", "k3", "v3")],
+        "topic STRING, key STRING, value STRING",
+    )
+    foreach_batch_parquet_demux(seed)(batch, 0)
+    (epoch,) = os.listdir(seed)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = {}
+    for n in (40, 400):
+        out = tmp_path / f"demux-{n}"
+        for i in range(n):
+            _shutil.copytree(os.path.join(seed, epoch), out / f"epoch-{i:020d}")
+        j0 = sched.nextJobId()
+        assert read_parquet_demux(spark, str(out)).count() == 3 * n
+        jobs[n] = sched.nextJobId() - j0
+    assert jobs[40] == jobs[400] <= 4, jobs
+
+
+def test_demux_topics_read_back_exactly(spark, tmp_path):
+    """Topic names Spark escapes in dir names (and the file path
+    URI-encodes again) come back byte-equal, a null topic comes back
+    null, and an all-numeric topic stays a STRING instead of an
+    inferred int."""
+    from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
+        foreach_batch_parquet_demux,
+        read_parquet_demux,
+    )
+
+    out = str(tmp_path / "demux")
+    write = foreach_batch_parquet_demux(out)
+    topics = ["a:b", "p%q", "x y", "t+u", None]
+    write(
+        spark.createDataFrame(
+            [(t, f"k{i}", "v") for i, t in enumerate(topics)],
+            "topic STRING, key STRING, value STRING",
+        ),
+        0,
+    )
+    got = read_parquet_demux(spark, out)
+    assert got.columns == ["key", "value", "topic"]
+    assert {r["key"]: r["topic"] for r in got.collect()} == {
+        f"k{i}": t for i, t in enumerate(topics)
+    }
+
+    numeric = str(tmp_path / "numeric")
+    foreach_batch_parquet_demux(numeric)(
+        spark.createDataFrame(
+            [("123", "k", "v")], "topic STRING, key STRING, value STRING"
+        ),
+        0,
+    )
+    got = read_parquet_demux(spark, numeric)
+    assert dict(got.dtypes)["topic"] == "string"
+    assert [r["topic"] for r in got.collect()] == ["123"]
+
+
+def test_demux_staging_dir_is_never_read(spark, tmp_path):
+    """A ``.staging`` dir that holds parquet (a crash leftover, in the
+    layout a publish would have renamed) is invisible to the reader."""
+    import shutil as _shutil
+
+    from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
+        foreach_batch_parquet_demux,
+        read_parquet_demux,
+    )
+
+    out = str(tmp_path / "demux")
+    batch = spark.createDataFrame(
+        [("t.a", "k1", "v1"), ("t.b", "k2", "v2")],
+        "topic STRING, key STRING, value STRING",
+    )
+    foreach_batch_parquet_demux(out)(batch, 0)
+    (epoch,) = os.listdir(out)
+    _shutil.copytree(
+        os.path.join(out, epoch), os.path.join(out, f"epoch-{1:020d}.staging")
+    )
+    assert read_parquet_demux(spark, out).count() == 2
+
+
+def test_demux_empty_epoch_publishes_nothing(spark, tmp_path):
+    """A zero-row epoch leaves neither a published nor a staging dir,
+    and the next epoch publishes and reads back."""
+    from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
+        foreach_batch_parquet_demux,
+        read_parquet_demux,
+    )
+
+    out = str(tmp_path / "demux")
+    write = foreach_batch_parquet_demux(out)
+    batch = spark.createDataFrame(
+        [("t.a", "k1", "v1"), ("t.b", "k2", "v2")],
+        "topic STRING, key STRING, value STRING",
+    )
+    write(batch.limit(0), 0)
+    assert not os.path.exists(out) or os.listdir(out) == []
+    write(batch, 1)
+    assert len(os.listdir(out)) == 1
+    got = read_parquet_demux(spark, out)
+    assert sorted((r["topic"], r["key"]) for r in got.collect()) == [
+        ("t.a", "k1"),
+        ("t.b", "k2"),
+    ]
+
+
+def test_kafka_empty_batch_marks_nothing(tmp_path, spark):
+    """An empty batch at an unmarked epoch returns before the produce
+    (no broker is reachable) and writes no epoch marker."""
+    from pymongo_change_stream_reader_spark.storage import epoch_committed
+    from pymongo_change_stream_reader_spark.streaming.job import RelaySettings
+    from pymongo_change_stream_reader_spark.streaming.kafka_sink import (
+        foreach_batch_kafka_with_topics,
+    )
+
+    settings = RelaySettings(
+        stream_reader_name="eo-empty", checkpoint_dir=str(tmp_path / "ckpt")
+    )
+    empty = spark.createDataFrame([], "topic STRING, key STRING, value STRING")
+    foreach_batch_kafka_with_topics("localhost:1", settings)(empty, 3)
+    marker_dir = os.path.join(settings.checkpoint_location, "epoch_log")
+    assert not epoch_committed(marker_dir, 3)
 
 
 def test_streaming_metrics_recorder(spark, tmp_path):

@@ -13,8 +13,11 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
+from pathlib import Path
 
-sys.path.insert(0, sys.argv[1] if len(sys.argv) > 1 else "/root/repo")
+sys.path.insert(
+    0, sys.argv[1] if len(sys.argv) > 1 else str(Path(__file__).resolve().parents[1])
+)
 
 
 def main() -> None:
